@@ -234,14 +234,45 @@ object Bench {
     }
   }
 
+  /** The core count of the bench protocol: the only sessions whose
+    * timings define the floors and the repo's BENCH_FULL.json. */
+  val ProtocolCpus = 32
+
+  /** The durable files one session writes under `repoRoot`: (the floors
+    * history it persists into, the path of its full JSON). An unfiltered
+    * session at [[ProtocolCpus]] writes BENCH_FLOORS.json and
+    * BENCH_FULL.json; an unfiltered session at any other core count writes
+    * only its side artifact BENCH_FULL_c<N>.json, so an 8-core run can
+    * neither lower a floor nor pass for the protocol run; a filtered
+    * session writes neither. */
+  def durablePaths(repoRoot: String, cpus: Int,
+                   filtered: Boolean): (Option[String], Option[String]) =
+    if (filtered) (None, None)
+    else if (cpus == ProtocolCpus)
+      (Some(s"$repoRoot/BENCH_FLOORS.json"), Some(s"$repoRoot/BENCH_FULL.json"))
+    else (None, Some(s"$repoRoot/BENCH_FULL_c$cpus.json"))
+
+  /** What produced an artifact: the core count, the git HEAD of the
+    * working directory, and the host's 1-minute load average when the
+    * session started (negative where the platform has none). */
+  def provenance(cpus: Int, loadAverage: Double): String = {
+    val head =
+      try scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"))
+        .!!(scala.sys.process.ProcessLogger(_ => ())).trim
+      catch { case NonFatal(_) => "unknown" }
+    s""","cpus":$cpus,"head":"$head","loadavg":${r3(loadAverage)}"""
+  }
+
   /** The COMPLETE one-line JSON — every query entry; goes to the durable
     * files, where bytes are free. `floors` lands beside the passes with
     * its p50/p90 attribution; `only` marks a FILTERED session so a
-    * partial artifact is self-identifying (ADVICE r15). */
+    * partial artifact is self-identifying (ADVICE r15); `provenance` is
+    * [[provenance]]'s section. */
   def fullJson(results: Map[String, (Double, Option[String])], sfDir: String,
                detailed: Option[Map[String, Timing]] = None,
                floors: Map[String, Double] = Map.empty,
-               only: Option[Seq[String]] = None): String = {
+               only: Option[Seq[String]] = None,
+               provenance: String = ""): String = {
     val qs = results.map { case (k, (v, _)) => s"\"$k\":${r3(v)}" }.mkString("{", ",", "}")
     val errs = errsOf(results)
     val total = results.values.map(_._1).sum
@@ -268,7 +299,7 @@ object Bench {
       s""","only":${names.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}""")
     s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,""" +
       s""""errors":${errs.mkString("{", ",", "}")},"failed":${errs.size},""" +
-      s""""sf":"$sfDir"$onlySection$noise$floorsSection}"""
+      s""""sf":"$sfDir"$provenance$onlySection$noise$floorsSection}"""
   }
 
   /** The stdout line: the driver captures a bounded
@@ -317,6 +348,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val loadAtStart =
+      java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -373,19 +406,22 @@ object Bench {
     val detailed = measureDetailed(spark, sfDir, queries)
     val results = detailed.map { case (n, t) => n -> (t.best, t.err) }
     // floors: read prior minima, fold this session in, persist — FULL
-    // sessions only (a filtered mini-session is measurably colder,
-    // PERF.md finding 26, and must not define the surface either);
-    // filtered runs still READ floors so their artifact attributes too.
+    // sessions at the protocol's core count only (a filtered mini-session
+    // is measurably colder, PERF.md finding 26, and a session at another
+    // core count times a different machine); every other session still
+    // READS floors so its artifact attributes too.
     // sf0.1 only: minima from other scale factors are not comparable.
     val floorsPath = "/root/repo/BENCH_FLOORS.json"
+    val (persistInto, fullOut) =
+      durablePaths(new java.io.File(floorsPath).getParent, cpus.toInt, only.isDefined)
     val floorsApply = new java.io.File(sfDir).getName == "sf0.1"
     val prior = if (floorsApply) readFloors(floorsPath) else Map.empty[String, Double]
     val floors =
       if (!floorsApply) Map.empty[String, Double]
-      else if (only.isEmpty) persistFloors(floorsPath, prior, results)
-      else prior.view.filterKeys(results.keySet).toMap
+      else persistInto.fold(prior.view.filterKeys(results.keySet).toMap)(
+        persistFloors(_, prior, results))
     val json = fullJson(results, sfDir, Some(detailed), floors,
-      only.map(_.toSeq.sorted))
+      only.map(_.toSeq.sorted), provenance(cpus.toInt, loadAtStart))
     val failed = errsOf(results).size
     // durable copies FIRST — they can never lose data: /tmp for local
     // A/Bs, and a repo-root copy the judge can read after the driver's
@@ -395,8 +431,7 @@ object Bench {
     // artifact let a partial A/B masquerade as a full session downstream).
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (only.isEmpty) "/tmp/graft_bench.json" else "/tmp/graft_bench_only.json")
-    val durable = if (only.isEmpty) Seq("/root/repo/BENCH_FULL.json") else Nil
-    for (path <- (Seq(out) ++ durable).distinct) {
+    for (path <- (out +: fullOut.toSeq).distinct) {
       try {
         java.nio.file.Files.write(java.nio.file.Paths.get(path),
           (json + "\n").getBytes("UTF-8"))
@@ -409,10 +444,10 @@ object Bench {
     // complete inside the driver's window.
     try spark.stop() catch { case NonFatal(_) => () }
     println(json)
-    // the pointer names the DURABLE repo-root copy, not the volatile
-    // /tmp one (review round 8): a reader following it after /tmp is
-    // cleaned must still find every entry
-    println(compactJson(results, sfDir, "/root/repo/BENCH_FULL.json"))
+    // the pointer names the DURABLE repo-root copy where the session has
+    // one, not the volatile /tmp one (review round 8): a reader following
+    // it after /tmp is cleaned must still find every entry
+    println(compactJson(results, sfDir, fullOut.getOrElse(out)))
     System.out.flush()
     if (failed > 0) sys.exit(1)
   }

@@ -1,6 +1,7 @@
 package graft.engine.export
 
 import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.{ConcurrentHashMap, Executors, ThreadFactory}
 import scala.util.control.NonFatal
 
@@ -79,15 +80,23 @@ final class ExportService(
     pool.submit(new Runnable {
       def run(): Unit = {
         states.put(key, Processing)
+        // the streaming writers create their file when they open it, so
+        // they write a sibling the idempotency probe never matches, which
+        // then moves onto the target whole: the probe sees no file or the
+        // finished one, never a half-written one
+        val partial = Paths.get(s"$target.partial")
         try {
           val df = spark.read
             .option("header", "true").option("inferSchema", "true")
             .csv(resultCsvDir(queryId))
           new java.io.File(exportDir).mkdirs()
-          Exporters.write(df, format, target)
+          Exporters.write(df, format, partial.toString)
+          Files.move(partial, Paths.get(target), StandardCopyOption.ATOMIC_MOVE)
           states.put(key, Done(target))
         } catch {
-          case NonFatal(e) => states.put(key, Failed(String.valueOf(e.getMessage), clock()))
+          case NonFatal(e) =>
+            states.put(key, Failed(String.valueOf(e.getMessage), clock()))
+            Files.deleteIfExists(partial)
         }
       }
     })

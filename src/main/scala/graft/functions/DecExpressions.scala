@@ -14,7 +14,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   *           lit(BigDecimal(0)).cast("decimal(28,6)"),
   *           (acc, z) => (acc + z).cast("decimal(28,6)")).cast("double")
   * }}}
-  * measured (PERF.md finding 40 / graft.tools.DecProfile, x400 rung) at
+  * measured (PERF.md finding 40, x400 rung; the deleted DecProfile:
+  * `git show 2262a09:src/main/scala/graft/tools/DecProfile.scala`) at
   * 4.99 s where the same projection in double HOFs costs 0.69 s and a
   * codegen loop 0.16 s: ~86% of the cost is the per-element decimal
   * boxing (Double.toString → BigDecimal → Decimal per product, plus

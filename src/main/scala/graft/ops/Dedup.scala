@@ -91,7 +91,8 @@ object Dedup {
     * split CANNOT help — it keys on map-output partition BYTES, while
     * this skew is join FAN-OUT from a few-KB input (measured at x100:
     * a planted df-5,000 shingle put 12.5M pairs in one 117 s task
-    * against a 7.9 s median — SkewProfile). `maxDf` bounds d in the
+    * against a 7.9 s median — PERF finding 36; the deleted SkewProfile:
+    * `git show 2262a09:src/main/scala/graft/tools/SkewProfile.scala`). `maxDf` bounds d in the
     * documented operating mode, so the salted path below only arms when
     * maxDf is absent or maxDf² exceeds this budget: prefix keys whose
     * df² passes it are salted — the doc_a side hashed into
@@ -349,7 +350,7 @@ object Dedup {
 
   /** MinHash signatures as a pure projection — the whole k-permutation
     * signature in one pass over each doc's shingle array
-    * ([[graft.functions.MinhashSignature]]); no posting explode, no
+    * ([[graft.functions.MinhashFromHashes]]); no posting explode, no
     * shuffle until the band join. */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
                         n: Int, k: Int): DataFrame =
@@ -360,7 +361,7 @@ object Dedup {
     docs
       .select(col(idCol).as("doc"), Text.tokens(col(textCol)).as("__ws"))
       .select(col("doc"),
-        graft.functions.MinhashSignature.minhashFromHashes(
+        graft.functions.MinhashFromHashes.minhashFromHashes(
           graft.functions.ShingleHashes.sortedShingleHashes(col("__ws"), n), k).as("sig"))
 
   /** C13 (MinHash+LSH banding): approximate near-dup candidate pairs.
@@ -736,8 +737,9 @@ object Dedup {
     * Pointer jumping (comp := comp of comp) turns a diameter-d chain from
     * O(d) rounds into O(log d), but each jump is an extra labels self-join
     * + checkpoint per round — measured SLOWER on the shallow component
-    * graphs real dedup corpora produce (PERF.md CcAb A/B: every round
-    * paid the self-join, none saved a round). So jumping is GATED: plain
+    * graphs real dedup corpora produce (PERF finding 13's A/B: every
+    * round paid the self-join, none saved a round; the deleted CcAb:
+    * `git show 2262a09:src/main/scala/graft/tools/CcAb.scala`). So jumping is GATED: plain
     * min-propagation for the first `jumpFromRound - 1` rounds — enough for
     * the common diameter ≤ 3 clusters to converge without ever paying it —
     * then doubling kicks in for genuinely deep graphs.
@@ -798,123 +800,6 @@ object Dedup {
         s"connected components did not converge within $maxIter rounds — " +
           "partial labels would be wrong clusters; raise maxIter")
     (labels, i)
-  }
-
-  /** [[connectedComponentsStarWithRounds]] labels only. */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 20): DataFrame =
-    connectedComponentsStarWithRounds(pairs, maxIter)._1
-
-  /** Large-star/small-star connected components (Kiveris, Lattanzi,
-    * Mirrokni, Rastogi, Vassilvitskii, "Connected Components in MapReduce
-    * and Beyond", SoCC 2014): the alternating edge-rewriting algorithm —
-    * large-star points every strictly-larger neighbor of a node at the
-    * minimum of its closed neighborhood; small-star points the
-    * smaller-or-equal neighbors (and the node) there. Both preserve
-    * connectivity, keep edges oriented large→small, and converge to the
-    * star fixpoint where every edge is (node → component-min) in
-    * O(log² n) rounds worst-case — unlike plain min-propagation the
-    * iterate is the (shrinking) EDGE set, never an edges⋈labels join, so
-    * deep components cost log rounds without [[connectedComponentsWithRounds]]'s
-    * per-round labels self-join. A/B'd against the propagation core in
-    * `tools/CcAb` (PERF.md round-13) before routing production traffic.
-    *
-    * Loop witness: Σ labels derived from the current edge set (one
-    * aggregate), stable-sum ⇒ candidate fixpoint. Because star-round
-    * monotonicity of that sum is subtler than propagation's, a candidate
-    * fixpoint is then CERTIFIED exactly against the ORIGINAL graph: one
-    * min-propagation round over the input edges must not decrease any
-    * label (labels constant across every input edge ⇒ constant per
-    * component; the component min always self-labels under the large→small
-    * orientation ⇒ that constant is the min). A failed certificate keeps
-    * looping instead of returning wrong clusters.
-    *
-    * Same output contract as [[connectedComponents]]: (node, comp) with
-    * comp = min node id, every input endpoint present (self-pair-only
-    * nodes re-attached as singletons). Throws [[IllegalStateException]]
-    * on `maxIter` exhaustion — partial labels are wrong clusters. */
-  def connectedComponentsStarWithRounds(pairs: DataFrame, maxIter: Int = 20): (DataFrame, Int) = {
-    // checkpoint the input ONCE: nodes and sym each union two references,
-    // so an un-materialized pair plan (e.g. a lazy jaccardNearDup) would
-    // otherwise re-run its corpus passes four times here — twice the
-    // propagation core's cost before a single star round ran
-    val p = pairs.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
-    val nodes = p.select(col("doc_a").as("node"))
-      .union(p.select(col("doc_b").as("node")))
-      .distinct().localCheckpoint(true)
-    val sym = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .filter(col("src") =!= col("dst")).localCheckpoint(true)
-    var edges = sym
-      .select(greatest(col("src"), col("dst")).as("u"),
-        least(col("src"), col("dst")).as("v"))
-      .distinct().localCheckpoint(true)
-
-    // large-star over the symmetric view: m(u) = min(Γ(u) ∪ {u}); emit
-    // (v, m(u)) for v ∈ Γ(u), v > u. v > u ≥ m ⇒ output stays oriented
-    // large→small with no self-edges by construction.
-    def largeStar(e: DataFrame): DataFrame = {
-      val s = e.select(col("u"), col("v"))
-        .union(e.select(col("v").as("u"), col("u").as("v")))
-      val m = s.groupBy("u").agg(min(col("v")).as("mv"))
-        .select(col("u"), least(col("u"), col("mv")).as("m"))
-      s.join(m, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .distinct()
-    }
-
-    // small-star over the large→small orientation: m(u) = min of u's
-    // smaller neighbors (< u by orientation); emit (w, m(u)) for each
-    // smaller neighbor w plus (u, m(u)), dropping the w = m self-edge.
-    def smallStar(e: DataFrame): DataFrame = {
-      val m = e.groupBy("u").agg(min(col("v")).as("mv"))
-      e.join(m, "u")
-        .select(col("v").as("u"), col("mv").as("v"))
-        .union(m.select(col("u"), col("mv").as("v")))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-    }
-
-    def labelsOf(e: DataFrame): DataFrame =
-      e.select(col("u").as("node"), col("v").as("comp"))
-        .union(e.select(col("v").as("node"), col("v").as("comp")))
-        .groupBy("node").agg(min("comp").as("comp"))
-
-    // the exact fixpoint certificate on the input graph: no label
-    // decreases under one neighbor-min propagation round
-    def certified(labels: DataFrame): Boolean =
-      sym.join(labels.select(col("node"), col("comp").as("__dc")),
-          sym("dst") === col("node"))
-        .groupBy(col("src")).agg(min(col("__dc")).as("__nc"))
-        .join(labels, col("src") === labels("node"))
-        .filter(col("__nc") < col("comp"))
-        .isEmpty
-
-    // coalesce: an all-self-pair input yields an EMPTY edge set whose
-    // sum is NULL — the singleton re-attach below still labels its nodes
-    def labelSum(l: DataFrame): Long =
-      l.agg(coalesce(sum(col("comp")), lit(0L))).collect().head.getLong(0)
-
-    var i = 0
-    var done = false
-    var labels: DataFrame = null
-    var prevSum = Long.MinValue
-    while (!done && i < maxIter) {
-      edges = smallStar(largeStar(edges)).localCheckpoint(true)
-      labels = labelsOf(edges).localCheckpoint(true)
-      val s = labelSum(labels)
-      done = s == prevSum && certified(labels)
-      prevSum = s
-      i += 1
-    }
-    if (!done)
-      throw new IllegalStateException(
-        s"star connected components did not converge within $maxIter rounds — " +
-          "partial labels would be wrong clusters; raise maxIter")
-    // re-attach endpoints the u≠v filters dropped (self-pair-only nodes)
-    val full = nodes.join(labels, Seq("node"), "left")
-      .select(col("node"), coalesce(col("comp"), col("node")).as("comp"))
-    (full, i)
   }
 
   /** Line-level exact dedup (the C4 / RefinedWeb curation step: repeated

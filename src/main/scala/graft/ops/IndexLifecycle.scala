@@ -1990,7 +1990,9 @@ object IndexLifecycle {
     * / append / remove / compact / REBUILD). Appends assign under the
     * stale quantizer (FAISS `add()` semantics); once `indexStats`'
     * `appended_fraction` crosses the policy threshold (~0.5 per the
-    * DriftAb measurement — resize cells/nprobe first, the bigger lever),
+    * PERF finding 29 measurement, the deleted DriftAb:
+    * `git show 2262a09:src/main/scala/graft/tools/DriftAb.scala` — resize
+    * cells/nprobe first, the bigger lever),
     * this rebuilds in place with FRESH corpus-sized training:
     *
     *  - every layout is self-contained — the cell layouts store raw
@@ -2200,7 +2202,7 @@ object IndexLifecycle {
     * artifacts), so compacting first would pay the rewrite twice:
     *
     *  1. `appended_fraction` ≥ `rebuildAt` → [[rebuildIndex]] (the
-    *     finding-29 drift policy; ~0.5 per the DriftAb measurement —
+    *     finding-29 drift policy; ~0.5 per that finding's measurement —
     *     resize cells/nprobe first if recall is the binding concern,
     *     that lever is per-probe and free);
     *  2. small-file pressure — cell layouts: any cell over

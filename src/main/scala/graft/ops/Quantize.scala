@@ -283,8 +283,10 @@ object Quantize {
     // residual computed ONCE into a column, never inline in pqCode:
     // pqCode slices its argument into all m subspaces, and interpreted
     // eval (zip_with is a HOF — no codegen, no CSE) re-evaluates the
-    // duplicated residual subtree m times per row. Measured (PqProbeAb,
-    // r21): 1.06 s → 0.10 s per shortlist execution at sf0.1,
+    // duplicated residual subtree m times per row. Measured (PERF
+    // finding 42; the deleted PqProbeAb:
+    // `git show 2262a09:src/main/scala/graft/tools/PqProbeAb.scala`):
+    // 1.06 s → 0.10 s per shortlist execution at sf0.1,
     // rows bit-identical. Same fix in buildPqIndex/appendPqIndex.
     val shortlist = indexed
       .filter(col("cell").isin(model.probedCells(q, nprobe).map(Integer.valueOf): _*))

@@ -20,8 +20,6 @@ object Similarity {
     * the similarity family's bottleneck. */
   def dot(a: Column, b: Column): Column = graft.functions.VecFunctions.vecDot(a, b)
 
-  def l2norm(a: Column): Column = sqrt(dot(a, a))
-
   /** One-pass cosine ([[graft.functions.CosineSim]]). */
   def cosine(a: Column, b: Column): Column = graft.functions.VecFunctions.cosineSim(a, b)
 
@@ -779,8 +777,9 @@ object Similarity {
 
   /** Bucket-predicate disjunctions longer than this leave whole-stage
     * codegen (one giant method per deep Or tree) and evaluate
-    * interpreted per row — MpProfile measured 8.6 s vs 0.5 s for the
-    * same hits via a broadcast (table, bucket) equi-join at 126 pairs.
+    * interpreted per row — PERF finding 30 measured 8.6 s vs 0.5 s for
+    * the same hits via a broadcast (table, bucket) equi-join at 126 pairs
+    * (the deleted MpProfile: `git show 2262a09:src/main/scala/graft/tools/MpProfile.scala`).
     * Single-probe pair counts (= tables, ≤ ~15 at any sizing) stay
     * under it and keep the pushed-filter row-group pruning; multi-probe
     * counts (tables × (1 + q)) switch to the join. */
@@ -886,8 +885,8 @@ object Similarity {
     val postings = spark.read.parquet(s"$phys/postings.parquet")
     // foldLeft(false): an empty pair set (null query vector) selects
     // nothing instead of crashing an empty reduce — the fallback answers.
-    // Past [[OrPairCap]] pairs the OR becomes the cost: MpProfile at 25×
-    // measured the 126-term disjunction at 8.6 s (the deep Or tree falls
+    // Past [[OrPairCap]] pairs the OR becomes the cost: PERF finding 30
+    // at 25× measured the 126-term disjunction at 8.6 s (the deep Or tree falls
     // out of whole-stage codegen into interpreted per-row eval) where a
     // broadcast equi-join on the same pairs answers in 0.5 s. Under the
     // cap the OR wins — it pushes to the scan and prunes the
@@ -1046,10 +1045,11 @@ object Similarity {
     * scoring core [[prototypeScores]] and
     * [[graft.streaming.Streaming.prototypeFilterStream]] share. As of
     * r20 the fold runs in the codegen [[graft.functions.DecDot]]
-    * expression — DecProfile measured the HOF spelling
+    * expression — PERF finding 40 measured the HOF spelling
     * (`aggregate(zip_with(...))` with per-element decimal casts) at
     * 4.99 s where the double codegen floor reads 0.16 s on the same
-    * x400 projection, ~86% of it decimal boxing (PERF finding 40);
+    * x400 projection, ~86% of it decimal boxing (the deleted
+    * DecProfile: `git show 2262a09:src/main/scala/graft/tools/DecProfile.scala`);
     * value semantics are BIT-IDENTICAL by construction and pinned
     * against the literal HOF chain in DecExpressionsSpec. */
   private[graft] def dotDec(a: Column, b: Column): Column =

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Dedup
 
@@ -8,9 +8,10 @@ import graft.ops.Dedup
   * curation family composes primitives that each carry 100–400× direct
   * evidence, but the compositions themselves were measured only to 25× —
   * and compositions are where checkpoint pressure and repeated eager
-  * gates could stack nonlinearly (the CompactProfile session-composition
-  * precedent: 35.8 s for stages summing to 5.2 s under sibling
-  * checkpoint pressure).
+  * gates could stack nonlinearly (the x100 session-composition
+  * precedent in PERF.md, reading (b): compact read 35.8 s for stages
+  * summing to 5.2 s under sibling checkpoint pressure; the deleted
+  * CompactProfile: `git show 2262a09:src/main/scala/graft/tools/CompactProfile.scala`).
   *
   * Runs the three deepest compositions EXACTLY as the bench/driver run
   * them — through `SparkEntry.queries` on a scaled table dir, so the
@@ -44,21 +45,10 @@ import graft.ops.Dedup
 object CurationScale {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val ks = sys.env.getOrElse("SPARK_GRAFT_KS", "25,100")
-      .split(",").map(_.trim.toInt).toSeq
+    val ks = ScaleBench.rungs("25,100")
     // shuffle partitions scale with the rung (Scale100's rule: size
     // partitions to fit executor memory at the target SF)
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
+    val spark = ScaleBench.session(sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", ScaleBench.cpus))
 
     val base = graft.engine.Tables.read(spark, "/root/testdata/sf0.1", "documents")
     val baseEmb = graft.engine.Tables.read(spark, "/root/testdata/sf0.1", "embeddings")
@@ -69,40 +59,6 @@ object CurationScale {
     }
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
-
-    // Scale100's listener: per-stage run time (top stages), GC, spill —
-    // the attribution that lets a bending rung name its stage
-    def attributed(tag: String)(body: => Unit): (Double, Long, Long) = {
-      val gc = new java.util.concurrent.atomic.AtomicLong(0L)
-      val run = new java.util.concurrent.atomic.AtomicLong(0L)
-      val spillD = new java.util.concurrent.atomic.AtomicLong(0L)
-      val stageRun = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-      val stageName = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            gc.addAndGet(m.jvmGCTime); run.addAndGet(m.executorRunTime)
-            spillD.addAndGet(m.diskBytesSpilled)
-            stageRun.merge(te.stageId, m.executorRunTime, Long.box(_) + _)
-          }
-        }
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          stageName.put(sc.stageInfo.stageId, sc.stageInfo.name)
-      }
-      spark.sparkContext.addSparkListener(l)
-      try body
-      finally { Thread.sleep(1500); spark.sparkContext.removeSparkListener(l) }
-      import scala.jdk.CollectionConverters._
-      stageRun.asScala.toSeq.sortBy(-_._2).take(6).foreach { case (sid, ms) =>
-        println(f"[cur-stage] $tag s$sid%-4d ${ms / 1000.0}%8.1fs  " +
-          stageName.getOrDefault(sid, "?"))
-      }
-      (gc.get() / math.max(run.get(), 1L).toDouble,
-        run.get() / 1000L, spillD.get() >> 20)
-    }
 
     val queries = graft.SparkEntry.queries
     // SPARK_GRAFT_CUR=v9 runs ONE composition lean (the Scale100 family
@@ -129,13 +85,14 @@ object CurationScale {
 
       for (name <- family) {
         var wall = 0.0
-        val (gcFrac, runS, spillMb) = attributed(s"x$k $name") {
+        val m = ScaleBench.withTaskMetrics(spark) {
           val (t, _) = timeIt(noop(queries(name)(spark, dir)))
           wall = t
         }
+        m.printTopStages("cur-stage", s"x$k $name", 6)
         println(f"[cur] x$k%-3d docs=$nDocs%7d $name%-18s " +
-          f"wall=$wall%7.2fs gc=${gcFrac * 100}%4.1f%% run=${runS}s " +
-          f"spill=${spillMb}MB")
+          f"wall=$wall%7.2fs gc=${m.gcFraction * 100}%4.1f%% run=${m.runMs.get() / 1000L}s " +
+          f"spill=${m.spillDiskBytes.get() >> 20}MB")
       }
 
       // eager-gate compose-ONLY cost (verdict #6): plan built, never

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Ivf, IndexLifecycle, Similarity}
 
@@ -30,17 +30,9 @@ import graft.ops.{Dedup, Ivf, IndexLifecycle, Similarity}
 object LifecycleSweep {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val ks = sys.env.getOrElse("SPARK_GRAFT_KS", "1,2,5,10,25")
-      .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
+    val cpus = ScaleBench.cpus
+    val ks = ScaleBench.rungs("1,2,5,10,25")
+    val spark = ScaleBench.session(cpus)
 
     val baseEmb = graft.engine.Tables.read(spark, "/root/testdata/sf0.1", "embeddings")
 

@@ -2,21 +2,13 @@
 // to <outDir>/<query>_<tag>.txt (the r21 plans/ deliverable). Usage:
 //   sbt "runMain graft.tools.PlanDump <outDir> <tag> <q1,q2,...> [sfDir]"
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val tag = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ScaleBench.session(ScaleBench.cpus)
     new java.io.File(outDir).mkdirs()
     val unknown = names.toSet -- graft.SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{IndexLifecycle, Ivf}
 
@@ -22,18 +21,8 @@ import graft.ops.{IndexLifecycle, Ivf}
 object PtrSweep {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val ks = sys.env.getOrElse("SPARK_GRAFT_KS", "25,100")
-      .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
+    val ks = ScaleBench.rungs("25,100")
+    val spark = ScaleBench.session(ScaleBench.cpus)
 
     val baseEmb = graft.engine.Tables.read(spark, "/root/testdata/sf0.1", "embeddings")
 

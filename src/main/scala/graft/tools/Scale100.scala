@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Ivf, IndexLifecycle, Similarity}
 
@@ -27,9 +27,8 @@ import graft.ops.{Dedup, Ivf, IndexLifecycle, Similarity}
 object Scale100 {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val ks = sys.env.getOrElse("SPARK_GRAFT_KS", "25,100")
-      .split(",").map(_.trim.toInt).toSeq
+    val cpus = ScaleBench.cpus
+    val ks = ScaleBench.rungs("25,100")
     // at x100 ONE session cannot hold both families' checkpointed
     // frames without the later family reading driver-block pressure
     // instead of its own cost (measured: compact 35.8 s after the dedup
@@ -50,14 +49,7 @@ object Scale100 {
     // states: size partitions to fit executor memory at the target SF) —
     // cpus-many partitions hold 4× the rows at x100 vs x25 and spill
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
+    val spark = ScaleBench.session(shuffleParts)
     import spark.implicits._
 
     val base = graft.engine.Tables.read(spark, "/root/testdata/sf0.1", "documents")
@@ -70,44 +62,6 @@ object Scale100 {
     def noop(df: DataFrame): Long = {
       df.write.format("noop").mode("overwrite").save(); 0L
     }
-    // task-metric attribution for the dedup walls: total JVM GC time vs
-    // executor run time vs spill, PLUS per-stage runtime (which phase of
-    // the operator carries any superlinear term — wall alone can't say).
-    // Listener bus is async: drain before reading.
-    def gcFraction(tag: String)(body: => Unit): (Double, Double, Long, Long, Long) = {
-      val gc = new java.util.concurrent.atomic.AtomicLong(0L)
-      val run = new java.util.concurrent.atomic.AtomicLong(0L)
-      val spillM = new java.util.concurrent.atomic.AtomicLong(0L)
-      val spillD = new java.util.concurrent.atomic.AtomicLong(0L)
-      val stageRun = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-      val stageName = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            gc.addAndGet(m.jvmGCTime); run.addAndGet(m.executorRunTime)
-            spillM.addAndGet(m.memoryBytesSpilled)
-            spillD.addAndGet(m.diskBytesSpilled)
-            stageRun.merge(te.stageId, m.executorRunTime, Long.box(_) + _)
-          }
-        }
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          stageName.put(sc.stageInfo.stageId, sc.stageInfo.name)
-      }
-      spark.sparkContext.addSparkListener(l)
-      try body
-      finally { Thread.sleep(1500); spark.sparkContext.removeSparkListener(l) }
-      import scala.jdk.CollectionConverters._
-      stageRun.asScala.toSeq.sortBy(-_._2).take(8).foreach { case (sid, ms) =>
-        println(f"[s100-stage] $tag s$sid%-4d ${ms / 1000.0}%8.1fs  " +
-          stageName.getOrDefault(sid, "?"))
-      }
-      (gc.get() / 1000.0, gc.get().toDouble / math.max(run.get(), 1L),
-        run.get() / 1000L, spillM.get() >> 20, spillD.get() >> 20)
-    }
-
     // warm codegen/shuffle untimed (ScaleBench's rule)
     Dedup.jaccardNearDup(base.limit(1000), "doc_id", "text",
       n = 3, threshold = 0.6, maxDf = Some(100)).count()
@@ -123,7 +77,9 @@ object Scale100 {
       // the lifecycle/serve columns run FIRST, in a lean session: the
       // first x100 ordering ran compact after the dedup columns had
       // checkpointed ~6 GB of corpus/pair blocks and read 35.8 s where
-      // the isolated stages sum to 5.2 s (CompactProfile) — driver-held
+      // the isolated stages sum to 5.2 s (PERF.md x100 reading (b); the
+      // deleted CompactProfile:
+      // `git show 2262a09:src/main/scala/graft/tools/CompactProfile.scala`) — driver-held
       // block pressure, not the operator; docs checkpoint lazily below
       val emb = if (jacOnly) null
         else spark.read.parquet(s"$dir/embeddings.parquet")
@@ -240,11 +196,15 @@ object Scale100 {
         .repartition(cpus.toInt).localCheckpoint(true)
       val nDocs = docs.count()
       var tJac = 0.0
-      val (gcJac, gcFracJac, runJac, spillMJac, spillDJac) = gcFraction(s"x$k jac") {
+      val jac = ScaleBench.withTaskMetrics(spark) {
         val (t, _) = timeIt(noop(Dedup.jaccardNearDup(docs, "doc_id", "text",
           n = 3, threshold = 0.6, maxDf = Some(100))))
         tJac = t
       }
+      jac.printTopStages("s100-stage", s"x$k jac", 8)
+      val jacMetrics = f"jaccard=$tJac%7.2fs(gc=${jac.gcMs.get() / 1000.0}%6.1fs," +
+        f"${jac.gcFraction * 100}%4.1f%%,run=${jac.runMs.get() / 1000L}s," +
+        f"spill=${jac.spillMemBytes.get() >> 20}MB/${jac.spillDiskBytes.get() >> 20}MB) "
       val pairs = Dedup.jaccardNearDup(docs, "doc_id", "text",
         n = 3, threshold = 0.6, maxDf = Some(100)).localCheckpoint(true)
       val nPairs = pairs.count()
@@ -255,16 +215,14 @@ object Scale100 {
       }
 
       if (jacOnly) {
-        println(f"[s100] x$k%-3d docs=$nDocs%7d | " +
-          f"jaccard=$tJac%7.2fs(gc=$gcJac%6.1fs,${gcFracJac * 100}%4.1f%%," +
-          f"run=${runJac}s,spill=${spillMJac}MB/${spillDJac}MB) " +
+        println(f"[s100] x$k%-3d docs=$nDocs%7d | " + jacMetrics +
           f"pairs=$nPairs%8d cc=$tCc%6.2fs(r=$ccRounds)")
       } else {
       // ── hyperplane-LSH candidate pairs (finding-14 join-back tail:
       //    the vector table stops broadcasting past ~25×, same ceiling
       //    as the jaccard verify — finding 35) ────────────────────────────
       var tAnnS = 0.0; var nAnnS = 0L
-      val (gcA, gcFracA, runA, spillMA, spillDA) = gcFraction(s"x$k annS") {
+      val ann = ScaleBench.withTaskMetrics(spark) {
         val (t, nn) = timeIt {
           val c = Similarity.lshCandidatePairsSized(emb, "vec_id", "embedding")
             .localCheckpoint(true)
@@ -272,16 +230,18 @@ object Scale100 {
         }
         tAnnS = t; nAnnS = nn
       }
+      ann.printTopStages("s100-stage", s"x$k annS", 8)
       println(f"[s100] x$k%-3d annS=$tAnnS%7.2fs($nAnnS%8d) " +
-        f"gc=$gcA%5.1fs(${gcFracA * 100}%4.1f%%) run=${runA}s " +
-        f"spill=${spillMA}MB/${spillDA}MB")
+        f"gc=${ann.gcMs.get() / 1000.0}%5.1fs(${ann.gcFraction * 100}%4.1f%%) " +
+        f"run=${ann.runMs.get() / 1000L}s " +
+        f"spill=${ann.spillMemBytes.get() >> 20}MB/${ann.spillDiskBytes.get() >> 20}MB")
 
       // ── minhash-LSH banding (the last payload-bearing dedup exchange:
       //    sig_a/sig_b ride the pair dropDuplicates; banding bounds the
       //    candidate volume, so this should hold like annS — measured,
       //    not assumed) ───────────────────────────────────────────────────
       var tMh = 0.0; var nMh = 0L
-      val (gcM, gcFracM, runM, spillMM, spillDM) = gcFraction(s"x$k mh") {
+      val mh = ScaleBench.withTaskMetrics(spark) {
         val (t, nn) = timeIt {
           val c = Dedup.minhashLshCandidates(docs, "doc_id", "text",
             n = 3, bands = 8, rowsPerBand = 4, estThreshold = 0.5)
@@ -290,9 +250,11 @@ object Scale100 {
         }
         tMh = t; nMh = nn
       }
+      mh.printTopStages("s100-stage", s"x$k mh", 8)
       println(f"[s100] x$k%-3d mh=$tMh%7.2fs($nMh%8d) " +
-        f"gc=$gcM%5.1fs(${gcFracM * 100}%4.1f%%) run=${runM}s " +
-        f"spill=${spillMM}MB/${spillDM}MB")
+        f"gc=${mh.gcMs.get() / 1000.0}%5.1fs(${mh.gcFraction * 100}%4.1f%%) " +
+        f"run=${mh.runMs.get() / 1000L}s " +
+        f"spill=${mh.spillMemBytes.get() >> 20}MB/${mh.spillDiskBytes.get() >> 20}MB")
 
       // ── semantic two-level pairs at the sized level count ────────────
       val kCells = Dedup.cellsFor(nVecs)
@@ -303,9 +265,7 @@ object Scale100 {
         val n = p.count(); noop(p); n
       }
 
-      println(f"[s100] x$k%-3d docs=$nDocs%7d vecs=$nVecs%7d | " +
-        f"jaccard=$tJac%7.2fs(gc=$gcJac%6.1fs,${gcFracJac * 100}%4.1f%%," +
-        f"run=${runJac}s,spill=${spillMJac}MB/${spillDJac}MB) " +
+      println(f"[s100] x$k%-3d docs=$nDocs%7d vecs=$nVecs%7d | " + jacMetrics +
         f"pairs=$nPairs%8d cc=$tCc%6.2fs(r=$ccRounds) " +
         f"sem2=$tSem2%6.2fs($nSem2%8d,k=$kLevel^2)")
       }

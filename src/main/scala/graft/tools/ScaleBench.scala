@@ -1,5 +1,8 @@
 package graft.tools
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Ivf, Quantize, Relational, Similarity, Text}
@@ -23,6 +26,72 @@ import graft.ops.{Dedup, Ivf, Quantize, Relational, Similarity, Text}
   * Run: sbt "runMain graft.tools.ScaleBench"   (SPARK_GRAFT_KS=1,2,5 to trim)
   */
 object ScaleBench {
+
+  /** The core count every rung driver runs at (SPARK_GRAFT_CPUS, default 32). */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** The rungs (corpus multiples) to run: SPARK_GRAFT_KS, comma-separated. */
+  def rungs(default: String): Seq[Int] =
+    sys.env.getOrElse("SPARK_GRAFT_KS", default).split(",").map(_.trim.toInt).toSeq
+
+  /** The `local[cpus]` session every rung driver runs in: a 15 s cleaner
+    * GC (checkpointed rungs otherwise fill the block store; the default
+    * interval never fires within a run) and one untimed warm-up job. */
+  def session(shufflePartitions: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.cleaner.periodicGC.interval", "15s")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark.range(1000000L).selectExpr("sum(id)").collect()
+    spark
+  }
+
+  /** Task metrics summed over every job one measured body ran. */
+  final class TaskMetrics {
+    val gcMs, runMs, spillMemBytes, spillDiskBytes, shuffleWriteBytes = new AtomicLong(0L)
+    val stageRunMs = new ConcurrentHashMap[Int, Long]()
+    val stageName = new ConcurrentHashMap[Int, String]()
+
+    def gcFraction: Double = gcMs.get().toDouble / math.max(runMs.get(), 1L)
+
+    /** Prints the `n` stages with the most executor run time: which phase
+      * of an operator carries a superlinear term, which wall alone can't say. */
+    def printTopStages(label: String, tag: String, n: Int): Unit = {
+      import scala.jdk.CollectionConverters._
+      stageRunMs.asScala.toSeq.sortBy(-_._2).take(n).foreach { case (sid, ms) =>
+        println(f"[$label] $tag s$sid%-4d ${ms / 1000.0}%8.1fs  " +
+          stageName.getOrDefault(sid, "?"))
+      }
+    }
+  }
+
+  /** Runs `body` under a listener that sums its tasks' GC, run time, spill
+    * and shuffle write, per stage too. The listener bus is asynchronous, so
+    * it drains for a beat before the listener comes off. */
+  def withTaskMetrics(spark: SparkSession)(body: => Unit): TaskMetrics = {
+    val out = new TaskMetrics
+    val listener = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+        val m = te.taskMetrics
+        if (m != null) {
+          out.gcMs.addAndGet(m.jvmGCTime); out.runMs.addAndGet(m.executorRunTime)
+          out.spillMemBytes.addAndGet(m.memoryBytesSpilled)
+          out.spillDiskBytes.addAndGet(m.diskBytesSpilled)
+          out.shuffleWriteBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          out.stageRunMs.merge(te.stageId, m.executorRunTime, Long.box(_) + _)
+        }
+      }
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+        out.stageName.put(sc.stageInfo.stageId, sc.stageInfo.name)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try body finally { Thread.sleep(1500); spark.sparkContext.removeSparkListener(listener) }
+    out
+  }
 
   /** Replicate docs `k`× with per-replica token tagging. */
   def scaled(docs: DataFrame, k: Int): DataFrame = {
@@ -67,18 +136,10 @@ object ScaleBench {
     }.reduce(_ unionAll _)
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val ks = sys.env.getOrElse("SPARK_GRAFT_KS", "1,2,5,10,25")
-      .split(",").map(_.trim.toInt).toSeq
+    val cpus = ScaleBench.cpus
+    val ks = rungs("1,2,5,10,25")
     val rounds = sys.env.getOrElse("SPARK_GRAFT_ROUNDS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
+    val spark = session(cpus)
 
     val base = graft.engine.Tables.read(spark, "/root/testdata/sf0.1", "documents")
     val baseEmb = graft.engine.Tables.read(spark, "/root/testdata/sf0.1", "embeddings")
@@ -92,22 +153,6 @@ object ScaleBench {
     def noop(df: DataFrame): Long = {
       df.write.format("noop").mode("overwrite").save(); 0L
     }
-    // total shuffle-write bytes across every job `body` runs (listener
-    // bus is async — drain with a beat before reading; good to the
-    // megabyte, which is all the comparison needs)
-    def shuffledBytes(body: => Unit): Long = {
-      val acc = new java.util.concurrent.atomic.AtomicLong(0L)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) acc.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try body finally { Thread.sleep(1500); spark.sparkContext.removeSparkListener(l) }
-      acc.get()
-    }
-
     // warm codegen/shuffle paths untimed so x1 doesn't absorb JVM startup
     Dedup.jaccardNearDup(base.limit(1000), "doc_id", "text",
       n = 3, threshold = 0.6, maxDf = Some(100)).count()
@@ -136,15 +181,6 @@ object ScaleBench {
       val nPairs = pairs.count()
       val (tCc, ccRounds) = timeIt {
         val (labels, rounds) = Dedup.connectedComponentsWithRounds(pairs, maxIter = 20)
-        labels.write.format("noop").mode("overwrite").save()
-        rounds.toLong
-      }
-      // the Kiveris et al. large-star/small-star core on the SAME pair
-      // frame: per-round cost is two agg+join+distinct passes over the
-      // (shrinking) edge set vs propagation's edges⋈labels join — the
-      // round count and wall here decide which core owns production
-      val (tCcStar, ccStarRounds) = timeIt {
-        val (labels, rounds) = Dedup.connectedComponentsStarWithRounds(pairs, maxIter = 20)
         labels.write.format("noop").mode("overwrite").save()
         rounds.toLong
       }
@@ -322,11 +358,11 @@ object ScaleBench {
       // and recovers rep text through the gated broadcast semi-join, so
       // its shuffled bytes must drop to ~digest volume while the text
       // form ships every distinct document through the exchange
-      val bytesTextKey = shuffledBytes(noop(
+      val bytesTextKey = withTaskMetrics(spark)(noop(
         docs.groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
-          .select(col("doc_id"), col("text"))))
-      val bytesDigestKey = shuffledBytes(noop(
-        Dedup.repCollapse(docs, "doc_id", "text")))
+          .select(col("doc_id"), col("text")))).shuffleWriteBytes.get()
+      val bytesDigestKey = withTaskMetrics(spark)(noop(
+        Dedup.repCollapse(docs, "doc_id", "text"))).shuffleWriteBytes.get()
       // search-side finding 18: at the SIZED search
       // cell count (cellsForSearch = √(4n)) one Lloyd iteration costs
       // points·k distance evals, so the single-level wall grows ~n^1.5
@@ -675,7 +711,7 @@ object ScaleBench {
 
       println(f"[scale] r$round x$k%-2d docs=$nDocs%7d vecs=$nVecs%6d | " +
         f"jaccard=$tJac%6.2fs pairs=$nPairs%6d cc=$tCc%5.2fs(r=$ccRounds) " +
-        f"ccStar=$tCcStar%5.2fs(r=$ccStarRounds) rm=$tRm%5.2fs | " +
+        f"rm=$tRm%5.2fs | " +
         f"lsh=$tLsh%5.2fs($nLsh%5d) ann=$tAnn%5.2fs($nAnn%6d) annS=$tAnnS%5.2fs($nAnnS%6d) " +
         f"proto=$tProto%5.2fs pq=$tPq%5.2fs | " +
         f"decon=$tDec%5.2fs dist=$tDecD%5.2fs bloom=$tDecB%5.2fs sdec=$tSdec%5.2fs pack=$tPack%5.2fs line=$tLine%5.2fs " +

@@ -211,6 +211,25 @@ class BenchSpec extends SparkSpec {
       "full sessions must not carry the filter marker")
   }
 
+  test("only an unfiltered 32-core session writes the floors and BENCH_FULL.json") {
+    assert(Bench.durablePaths("/r", 32, filtered = false) ==
+      (Some("/r/BENCH_FLOORS.json"), Some("/r/BENCH_FULL.json")))
+    for (cpus <- Seq(4, 8, 16, 64))
+      assert(Bench.durablePaths("/r", cpus, filtered = false) ==
+        (None, Some(s"/r/BENCH_FULL_c$cpus.json")), s"cpus=$cpus")
+    for (cpus <- Seq(8, 32))
+      assert(Bench.durablePaths("/r", cpus, filtered = true) == (None, None), s"cpus=$cpus")
+  }
+
+  test("the full JSON records cpus, git HEAD and the load average") {
+    val results: Map[String, (Double, Option[String])] = Map("a" -> (1.0, None))
+    val json = Bench.fullJson(results, "sf0.1", provenance = Bench.provenance(8, 1.5))
+    assert(json.contains(""""cpus":8,"""), json)
+    assert(""""head":"([0-9a-f]{40}|unknown)"""".r.findFirstIn(json).isDefined, json)
+    assert(json.contains(""""loadavg":1.50"""), json)
+    assert(json.count(_ == '{') == json.count(_ == '}'), s"unbalanced: $json")
+  }
+
   test("driver contract: every oracle has a query, names are driver-safe, entry smokes") {
     // the driver joins oracleSql to queries BY NAME and embeds names in
     // file paths / JSON keys — an orphaned oracle or an exotic name fails

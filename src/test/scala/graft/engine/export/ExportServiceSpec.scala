@@ -83,6 +83,36 @@ class ExportServiceSpec extends SparkSpec {
     }
   }
 
+  test("a client polling export is handed Done only for a complete file") {
+    // the streaming writers create the target when they open it; a poll
+    // that lands mid-write must see QUEUED/PROCESSING, never Done on a
+    // partial file. Each Done is read back at once, while a partial file
+    // would still be growing.
+    val (svc, resultDir, _) = setup()
+    val rows = 100000L
+    spark.range(rows).selectExpr("id AS k", "concat('row-', id, '-', repeat('x', 40)) AS v")
+      .write.option("header", "true").csv(s"$resultDir/big")
+    try {
+      val deadline = System.currentTimeMillis() + 120000
+      var polls = 0
+      var dones = 0
+      while (dones < 3 && System.currentTimeMillis() < deadline) {
+        polls += 1
+        svc.export("big", "csv") match {
+          case Done(path) =>
+            val lines = Files.lines(java.nio.file.Paths.get(path))
+            val readBack = try lines.count() - 1 finally lines.close()
+            assert(readBack == rows, s"poll $polls: Done named a file with $readBack of $rows rows")
+            dones += 1
+          case f: Failed => fail(s"export failed: $f")
+          case _ => ()
+        }
+      }
+      assert(dones == 3, s"no Done within the deadline after $polls polls")
+      assert(polls > 3, "the export finished before the first poll; nothing was raced")
+    } finally svc.close()
+  }
+
   test("unsupported format rejected synchronously") {
     val (svc, _, _) = setup()
     intercept[IllegalArgumentException] { svc.export("q1", "pdf") }

@@ -272,8 +272,9 @@ class DedupSpec extends SparkSpec {
   test("hot-prefix-key salt: salted kernel equals unsalted kernel and small tail pair-for-pair (point mass)") {
     // r17 verdict #6: a prefix key with df d carries ~d²/2 verify pairs
     // under ONE sort-merge key and AQE's byte-keyed skew split never
-    // touches join fan-out (SkewProfile: a planted df-5k mass = one
-    // 117 s task). The kernel tail salts keys past hotPairBudget —
+    // touches join fan-out (PERF finding 36: a planted df-5k mass = one
+    // 117 s task; the deleted SkewProfile measured it, source via
+    // `git show 2262a09:src/main/scala/graft/tools/SkewProfile.scala`). The kernel tail salts keys past hotPairBudget —
     // doc_a hashed into g groups, doc_b replicated to all g — which
     // must be invisible in the result. Point mass: 30 docs share one
     // planted shingle; budget 1 makes EVERY key hot (all pairs traverse
@@ -319,66 +320,66 @@ class DedupSpec extends SparkSpec {
     assert(e.getMessage.contains("did not converge"))
   }
 
-  test("large-star/small-star components equal the propagation core (chains, cycles, self-pairs, real pairs)") {
-    // the Kiveris et al. core must be label-identical to
-    // connectedComponentsWithRounds on every graph shape the pair
-    // generators emit — including a self-pair-only node, which the star
-    // core re-attaches as a singleton after its u≠v edge filters
-    def labelsOf(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  /** The reference the propagation core is checked against: a driver-side
+    * union-find over the pair list, each node labelled with the min id of
+    * its component. */
+  private def unionFindLabels(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((a, b) <- pairs) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  private def pairsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    df.select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  private def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("connected components equal a driver-side union-find (chains, cycles, hubs, self-pairs, real pairs)") {
+    // every graph shape the pair generators emit, including a
+    // self-pair-only node, which must come back as its own singleton
     val shapes = Seq(
       "mixed" -> Seq((1L, 2L), (2L, 3L), (5L, 6L), (10L, 11L), (11L, 12L),
-        (12L, 13L), (10L, 13L), (20L, 20L)).toDF("doc_a", "doc_b"),
-      "chain" -> (1L until 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b"),
-      // high-degree hub + reversed-order edges: the shapes that stress the
-      // two cores differently
-      "hub" -> ((2L to 30L).map(i => (i, 1L)) ++ Seq((31L, 30L), (32L, 31L)))
-        .toDF("doc_a", "doc_b"))
+        (12L, 13L), (10L, 13L), (20L, 20L)),
+      "chain" -> (1L until 40L).map(i => (i, i + 1)),
+      // high-degree hub + reversed-order edges
+      "hub" -> ((2L to 30L).map(i => (i, 1L)) ++ Seq((31L, 30L), (32L, 31L))))
     for ((name, pairs) <- shapes) {
-      val star = labelsOf(Dedup.connectedComponentsStar(pairs, maxIter = 30))
-      val prop = labelsOf(Dedup.connectedComponents(pairs, maxIter = 50))
-      assert(star == prop, s"$name: star $star vs propagation $prop")
+      val prop = labelsOf(Dedup.connectedComponents(pairs.toDF("doc_a", "doc_b"), maxIter = 50))
+      val ref = unionFindLabels(pairs)
+      assert(prop == ref, s"$name: propagation $prop vs union-find $ref")
     }
     // and on the REAL near-dup pair graph at sf0.001
     val docs = graft.engine.Tables.read(spark, sf0001, "documents")
     val real = Dedup.jaccardNearDup(docs, "doc_id", "text",
       n = 3, threshold = 0.6, maxDf = Some(100)).localCheckpoint(true)
-    val star = labelsOf(Dedup.connectedComponentsStar(real))
     val prop = labelsOf(Dedup.connectedComponents(real))
-    assert(star == prop, "star core diverged from propagation on the real pair graph")
-    assert(star.nonEmpty)
+    assert(prop == unionFindLabels(pairsOf(real)),
+      "propagation diverged from union-find on the real pair graph")
+    assert(prop.nonEmpty)
   }
 
-  test("star components equal propagation on random graphs (property)") {
+  test("connected components equal a driver-side union-find on random graphs (property)") {
     // fixed-shape cases can miss structural corners (multi-hub overlap,
     // dense cores, many singletons-in-pairs): random multigraphs over a
-    // small id space force heavy component merging both cores must agree on
+    // small id space force heavy component merging
     val rnd = new scala.util.Random(431)
     for (trial <- 1 to 5) {
       val n = 6 + rnd.nextInt(25)
       val m = 1 + rnd.nextInt(3 * n)
-      val pairs = Seq.fill(m)(
-        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)).toDF("doc_a", "doc_b")
-        .localCheckpoint(true)
-      val star = Dedup.connectedComponentsStar(pairs, maxIter = 30)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val prop = Dedup.connectedComponents(pairs, maxIter = 50)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(star == prop, s"trial $trial (n=$n m=$m): $star vs $prop")
+      val pairs = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      val prop = labelsOf(Dedup.connectedComponents(
+        pairs.toDF("doc_a", "doc_b").localCheckpoint(true), maxIter = 50))
+      val ref = unionFindLabels(pairs)
+      assert(prop == ref, s"trial $trial (n=$n m=$m): $prop vs $ref")
     }
-  }
-
-  test("star components converge in few rounds on a deep chain and throw on exhaustion") {
-    val chain = (1L until 200L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val (labels, rounds) = Dedup.connectedComponentsStarWithRounds(chain, maxIter = 15)
-    val comp = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(comp.size == 200 && comp.values.toSet == Set(1L))
-    info(s"diameter-199 chain converged in $rounds star rounds")
-    assert(rounds <= 10, s"expected O(log d) star rounds, got $rounds")
-    val e = intercept[IllegalStateException] {
-      Dedup.connectedComponentsStarWithRounds(chain, maxIter = 2)
-    }
-    assert(e.getMessage.contains("did not converge"))
   }
 
   test("pointer jumping is gated: plain rounds first, doubling only when deep") {
