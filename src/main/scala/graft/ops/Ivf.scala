@@ -456,13 +456,15 @@ object Ivf {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
   }
 
-  /** Load the coarse model back from `dir` (driver-held, small by the
-    * residual-regime construction). */
+  /** Load the coarse model of the index built at `root` back
+    * (driver-held, small by the residual-regime construction). */
   def loadIndexModel(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): IndexModel = {
-    // self-heal a rebuild crashed mid whole-dir swap before touching
-    // any artifact (IndexLifecycle.recoverIndexDir's contract)
-    IndexLifecycle.recoverIndexDir(spark, dir)
+                     root: String): IndexModel =
+    readIndexModel(spark, IndexLifecycle.resolveIndexDir(spark, root))
+
+  /** [[loadIndexModel]] from a resolved generation dir. */
+  private[graft] def readIndexModel(spark: org.apache.spark.sql.SparkSession,
+                                    dir: String): IndexModel = {
     val rows = spark.read.parquet(s"$dir/centroids.parquet")
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
@@ -507,32 +509,25 @@ object Ivf {
                  nprobe: Int = 4, seed: Long = 42L,
                  sampleFraction: Double = 1.0, maxIter: Int = 10,
                  hierarchicalThreshold: Int = Dedup.HierarchicalCellsThreshold): IndexModel =
-  IndexLifecycle.withIndexLock(emb.sparkSession, dir, "buildIndex") {
-    IndexLifecycle.requireNotPointerRoot(emb.sparkSession, dir, "buildIndex")
+    IndexLifecycle.buildGeneration(emb.sparkSession, dir, "buildIndex")(gen =>
+      writeIndex(emb, idCol, vecCol, gen, nprobe, seed, sampleFraction,
+        maxIter, hierarchicalThreshold))
+
+  /** Train and write the IVF artifacts into the fresh generation dir
+    * `gen` — [[buildIndex]]'s body, and [[IndexLifecycle.rebuildIndex]]'s
+    * for this layout. A build defines a NEW world: the generation
+    * carries no tombstone set, and the old generation keeps serving its
+    * own until the commit (LifecycleSweep once caught a rebuilt corpus
+    * serving minus the previous session's backlog). */
+  private[ops] def writeIndex(emb: DataFrame, idCol: String, vecCol: String,
+                              gen: String, nprobe: Int, seed: Long,
+                              sampleFraction: Double, maxIter: Int,
+                              hierarchicalThreshold: Int): IndexModel = {
     val n = emb.count()
     val cells = clampK(cellsForSearch(n, nprobe), n)
     val model = trainModel(emb, vecCol, cells, seed, sampleFraction, maxIter,
       hierarchicalThreshold)
-    // a build defines a NEW world: a stale tombstone set surviving the
-    // overwrite would silently filter the fresh index (LifecycleSweep
-    // caught a rebuilt corpus serving minus the old session's backlog).
-    // Cleared HERE — after training, as the new artifacts land — never
-    // at build start (the old index must keep serving its tombstones
-    // through the training window, and keep them if training crashes).
-    // CONTRACT (ADVICE r16): this clear-then-overwrite is atomic only
-    // for a FRESH dir. Re-building in place over a LIVE serving dir
-    // leaves a window (clear landed, overwrite hasn't) where a crash —
-    // or a concurrent probe — serves the OLD artifacts with their
-    // tombstones dropped: resurrection. In-place retrains must go
-    // through IndexLifecycle.rebuildIndex, whose staging-dir build +
-    // whole-dir swap lands the clear and the new artifacts atomically
-    // (the tombstones die with the old dir, never before it).
-    // Fencing check before the write phase: a build that stalled past
-    // takeover (training can be long) must not clear/overwrite under
-    // the new holder (IndexLifecycle.requireLeaseStillHeld's contract)
-    IndexLifecycle.requireLeaseStillHeld(emb.sparkSession, "build tombstone clear + model overwrite")
-    IndexLifecycle.clearTombstones(emb.sparkSession, dir)
-    writeModel(emb.sparkSession, dir, model)
+    writeModel(emb.sparkSession, gen, model)
     // repartition(cell): without it every write task holding a cell's
     // rows emits its own file — a parallelism-32 build starts life at
     // 32 files per cell, the small-file state compactIndex exists to
@@ -542,8 +537,8 @@ object Ivf {
     model.indexOf(emb, idCol, vecCol)
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/invfile.parquet")
-    writeBuildInfo(emb.sparkSession, dir, n, Seq(
+      .parquet(s"$gen/invfile.parquet")
+    writeBuildInfo(emb.sparkSession, gen, n, Seq(
       "nprobe" -> nprobe, "seed" -> seed, "max_iter" -> maxIter,
       "sample_fraction" -> sampleFraction,
       "hierarchical_threshold" -> hierarchicalThreshold))
@@ -582,11 +577,10 @@ object Ivf {
                  nprobe: Int = 4,
                  selector: Option[DataFrame] = None): DataFrame =
   IndexLifecycle.fencedProbeResolved(spark, dir) { phys =>
-    // model FIRST: loadIndexModel runs whole-dir swap recovery, and the
-    // invfile read resolves its file listing eagerly. The result is a
-    // fully materialized local relation (neverShort), so the harness's
+    // the invfile read resolves its file listing eagerly. The result is
+    // a fully materialized local relation (neverShort), so the harness's
     // post-body fence covers every scan.
-    val model = loadIndexModel(spark, phys)
+    val model = readIndexModel(spark, phys)
     // tombstones filter at the inverted-file choke point: probed scan,
     // ranking, AND the never-short fallback read the filtered frame
     probeIndexFrame(
@@ -630,16 +624,16 @@ object Ivf {
   def appendIndex(emb: DataFrame, idCol: String, vecCol: String,
                   dir: String): IndexModel =
   IndexLifecycle.withIndexLock(emb.sparkSession, dir, "appendIndex") {
-    // pointer-mode roots append INTO the live generation: appends add
-    // new files (committer-staged — never a rename of EXISTING data,
-    // but the task-commit itself rides the configured committer; see
-    // the SCOPE paragraph on IndexLifecycle's pointer-mode intro for
-    // the copy+delete-store caveat) and keep the plan-snapshot
-    // visibility contract unchanged
+    // appends land INSIDE the live generation: new files only
+    // (committer-staged — never a rename of EXISTING data, but the
+    // task-commit itself rides the configured committer; see the SCOPE
+    // paragraph on IndexLifecycle's generation-root intro for the
+    // copy+delete-store caveat), under the plan-snapshot visibility
+    // contract
     val phys = IndexLifecycle.resolveIndexDir(emb.sparkSession, dir)
     requireLayout(emb.sparkSession, phys, "invfile.parquet",
       "appendIndex", "Quantize.appendPqIndex")
-    val model = loadIndexModel(emb.sparkSession, phys)
+    val model = readIndexModel(emb.sparkSession, phys)
     // repartition(cell): one file per TOUCHED cell per append (instead
     // of one per task per cell) — appends still accumulate one file
     // batch per append, which stays compactIndex's job
@@ -647,7 +641,8 @@ object Ivf {
       .repartition(col("cell"))
     // zombie-append fence: a stalled append resuming after takeover
     // would land rows assigned under a quantizer the new holder's
-    // rebuild has since replaced (or lose the batch with __old)
+    // rebuild has since replaced (or lose the batch with the GC'd
+    // generation)
     IndexLifecycle.requireLeaseStillHeld(emb.sparkSession, "invfile append")
     assigned.write.mode("append").partitionBy("cell")
       .parquet(s"$phys/invfile.parquet")
@@ -683,7 +678,7 @@ object Ivf {
   IndexLifecycle.fencedProbeResolved(spark, dir) { phys =>
     // result materializes inside finishBatchTopK (checkpointed on both
     // branches), so the harness's post-body fence covers every scan
-    val model = loadIndexModel(spark, phys)
+    val model = readIndexModel(spark, phys)
     val inv = Similarity.applySelector(
       cellSource(spark, phys, idCol, vecCol), selector, idCol)
     val qf = queries.select(col(qIdCol).as("query_id"), col(qVecCol).as("__qv"))

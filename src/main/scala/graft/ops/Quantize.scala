@@ -320,9 +320,19 @@ object Quantize {
                    nprobe: Int = 4, m: Int = 8, codebookSize: Int = 16,
                    seed: Long = 42L, trainSampleRows: Long = 16384L,
                    hierarchicalThreshold: Int = Dedup.HierarchicalCellsThreshold): PqIndexModel =
-  IndexLifecycle.withIndexLock(emb.sparkSession, dir, "buildPqIndex") {
+    IndexLifecycle.buildGeneration(emb.sparkSession, dir, "buildPqIndex")(gen =>
+      writePqIndex(emb, idCol, vecCol, gen, nprobe, m, codebookSize, seed,
+        trainSampleRows, hierarchicalThreshold))
+
+  /** Train and write the IVFADC artifacts into the fresh generation dir
+    * `gen` — [[buildPqIndex]]'s body, and [[IndexLifecycle.rebuildIndex]]'s
+    * for this layout ([[Ivf.writeIndex]]'s new-world rule). */
+  private[ops] def writePqIndex(emb: DataFrame, idCol: String, vecCol: String,
+                                gen: String, nprobe: Int, m: Int,
+                                codebookSize: Int, seed: Long,
+                                trainSampleRows: Long,
+                                hierarchicalThreshold: Int): PqIndexModel = {
     val spark = emb.sparkSession
-    IndexLifecycle.requireNotPointerRoot(spark, dir, "buildPqIndex")
     val n = emb.count()
     val coarse = trainCoarse(emb, vecCol, nprobe, seed, trainSampleRows, n,
       hierarchicalThreshold)
@@ -334,21 +344,13 @@ object Quantize {
         .select(coarse.residualOf(col(vecCol)).as("__res")).localCheckpoint(true)
     // same clamp as the coarse stage: tiny corpora train one code per point
     val cb = trainPq(trainBase, "__res", m, Ivf.clampK(codebookSize, n), seed)
-    // stale tombstones clear as the new world's artifacts land — after
-    // BOTH training stages, never at build start (Ivf.buildIndex's
-    // rationale — incl. its ADVICE-r16 contract: in-place retrains over
-    // a LIVE dir go through IndexLifecycle.rebuildIndex's staged swap,
-    // never a direct re-build, or a crash in the clear-to-overwrite
-    // window resurrects the old world's removals)
-    IndexLifecycle.requireLeaseStillHeld(spark, "build tombstone clear + model overwrite") // zombie-build fence
-    IndexLifecycle.clearTombstones(spark, dir)
-    Ivf.writeModel(spark, dir, coarse)
+    Ivf.writeModel(spark, gen, coarse)
     import spark.implicits._
     cb.books.zipWithIndex
       .flatMap { case (book, j) =>
         book.zipWithIndex.map { case (cen, c) => (j, c, cen.toSeq) } }
       .toSeq.toDF("j", "c", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/books.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(s"$gen/books.parquet")
     // repartition(cell): one file per cell (Ivf.buildIndex's rationale —
     // a parallel build must not start at compaction-pressure file counts)
     // residual once into a column (ivfPqWithModel's rationale: pqCode
@@ -358,12 +360,12 @@ object Quantize {
       .withColumn("code", pqCode(col("__res0"), cb))
       .drop("__res0")
       .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes.parquet")
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$gen/codes.parquet")
     // codebook_size is the REQUESTED size, pre-clamp (ADVICE r14): a
     // rebuild after the corpus grows must re-clamp the request against
     // the LIVE row count — the trained countDistinct(c) in books.parquet
     // is the clamp(k, n)-SHRUNK size, which clampK never grows back
-    Ivf.writeBuildInfo(spark, dir, n, Seq(
+    Ivf.writeBuildInfo(spark, gen, n, Seq(
       "nprobe" -> nprobe, "seed" -> seed, "m" -> m,
       "codebook_size" -> codebookSize,
       "train_sample_rows" -> trainSampleRows,
@@ -380,17 +382,16 @@ object Quantize {
   def appendPqIndex(emb: DataFrame, idCol: String, vecCol: String,
                     dir: String): PqIndexModel =
   IndexLifecycle.withIndexLock(emb.sparkSession, dir, "appendPqIndex") {
-    // pointer-mode roots append INTO the live generation
-    // (Ivf.appendIndex's rationale — new files only, never a rename of
-    // existing data; the committer caveat on IndexLifecycle's
-    // pointer-mode intro applies)
+    // appends land INSIDE the live generation (Ivf.appendIndex's
+    // rationale — new files only, never a rename of existing data; the
+    // committer caveat on IndexLifecycle's generation-root intro applies)
     val phys = IndexLifecycle.resolveIndexDir(emb.sparkSession, dir)
     // layout guard (ADVICE r13, symmetric with Ivf.appendIndex's): an
     // IVF-flat dir would fail later on books.parquet anyway, but with a
     // bare path error — fail here with the split-index rationale instead
     Ivf.requireLayout(emb.sparkSession, phys, "codes.parquet",
       "appendPqIndex", "Ivf.appendIndex")
-    val model = loadPqIndex(emb.sparkSession, phys)
+    val model = readPqIndex(emb.sparkSession, phys)
     // repartition(cell): one file per touched cell per append
     // residual once into a column (ivfPqWithModel's rationale)
     val coded = model.coarse.indexOf(emb, idCol, vecCol)
@@ -409,10 +410,15 @@ object Quantize {
     model
   }
 
-  /** Load a built IVFADC index's driver-held model back from `dir`. */
+  /** Load the driver-held model of the IVFADC index built at `root`. */
   def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
-                  dir: String): PqIndexModel = {
-    val coarse = Ivf.loadIndexModel(spark, dir)
+                  root: String): PqIndexModel =
+    readPqIndex(spark, IndexLifecycle.resolveIndexDir(spark, root))
+
+  /** [[loadPqIndex]] from a resolved generation dir. */
+  private[ops] def readPqIndex(spark: org.apache.spark.sql.SparkSession,
+                               dir: String): PqIndexModel = {
+    val coarse = Ivf.readIndexModel(spark, dir)
     val rows = spark.read.parquet(s"$dir/books.parquet")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     require(rows.nonEmpty, s"no PQ codebooks found under $dir")
@@ -435,10 +441,9 @@ object Quantize {
                    nprobe: Int = 4, rerank: Int = 100,
                    selector: Option[DataFrame] = None): DataFrame =
   IndexLifecycle.fencedProbeResolved(spark, dir) { phys =>
-    // model first — loadPqIndex (via Ivf.loadIndexModel) runs whole-dir
-    // swap recovery before the eager codes listing; the result is a
-    // materialized local relation (neverShort), fence-coverable
-    val model = loadPqIndex(spark, phys)
+    // the result is a materialized local relation (neverShort),
+    // fence-coverable
+    val model = readPqIndex(spark, phys)
     // tombstones filter at the code-table choke point (Ivf.probeIndex's
     // rationale): ADC shortlist AND exact fallback read the filtered frame
     pqProbeCore(

@@ -521,12 +521,7 @@ object Similarity {
     * here (it moves occupancy by O(backlog/live)). */
   def multiProbeFor(spark: org.apache.spark.sql.SparkSession, root: String,
                     targetCandidates: Int = 4096): Int = {
-    // reader of a swappable artifact — and callers evaluate this BEFORE
-    // entering the probe whose own recovery would otherwise run first;
-    // pointer-mode roots read through the committed generation
-    IndexLifecycle.recoverIndexDir(spark, root)
     val dir = IndexLifecycle.resolveIndexDir(spark, root)
-    IndexLifecycle.recoverSwap(spark, s"$dir/vectors.parquet")
     val meta = spark.read.parquet(s"$dir/meta.parquet").head()
     val live = spark.read.parquet(s"$dir/vectors.parquet").count()
     multiProbeForSized(live, meta.getAs[Int]("planes"),
@@ -547,23 +542,24 @@ object Similarity {
   def buildLshIndex(emb: DataFrame, idCol: String, vecCol: String,
                     dir: String, baseTables: Int = 8, dim: Int = 64,
                     seed: Long = 42L): Unit =
-  IndexLifecycle.withIndexLock(emb.sparkSession, dir, "buildLshIndex") {
+    IndexLifecycle.buildGeneration(emb.sparkSession, dir, "buildLshIndex")(gen =>
+      writeLshIndex(emb, idCol, vecCol, gen, baseTables, dim, seed))
+
+  /** Size and write the LSH artifacts into the fresh generation dir
+    * `gen` — [[buildLshIndex]]'s body, and
+    * [[IndexLifecycle.rebuildIndex]]'s for this layout
+    * ([[Ivf.writeIndex]]'s new-world rule). */
+  private[ops] def writeLshIndex(emb: DataFrame, idCol: String, vecCol: String,
+                                 gen: String, baseTables: Int, dim: Int,
+                                 seed: Long): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
-    IndexLifecycle.requireNotPointerRoot(spark, dir, "buildLshIndex")
     val n = emb.count()
     val planes = probePlanesFor(n)
     val tables = probeTablesFor(planes, baseTables)
-    // stale tombstones clear as the new world's artifacts land
-    // (Ivf.buildIndex's rationale; LSH has no training — sizing is the
-    // only pre-write stage. Incl. the ADVICE-r16 contract: in-place
-    // retrains over a LIVE dir go through IndexLifecycle.rebuildIndex's
-    // staged swap, never a direct re-build)
-    IndexLifecycle.requireLeaseStillHeld(spark, "build tombstone clear + meta overwrite") // zombie-build fence
-    IndexLifecycle.clearTombstones(spark, dir)
     Seq((planes, tables, dim, seed))
       .toDF("planes", "tables", "dim", "seed")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(s"$gen/meta.parquet")
     // vectors persist ONCE; postings carry (table, bucket, id) only —
     // the finding-22 rule (bucket structures ship ids, never payloads):
     // an lshIndex row exists PER TABLE, so writing vectors through it
@@ -571,17 +567,17 @@ object Similarity {
     // sizing). The corpus is scanned once into vectors.parquet and the
     // signature pass reads that back — never the source twice.
     emb.select(col(idCol), col(vecCol))
-      .write.mode("overwrite").parquet(s"$dir/vectors.parquet")
-    val src = spark.read.parquet(s"$dir/vectors.parquet")
+      .write.mode("overwrite").parquet(s"$gen/vectors.parquet")
+    val src = spark.read.parquet(s"$gen/vectors.parquet")
     lshIndex(src, idCol, vecCol, tables, planes, dim, seed)
       .select(col("table"), col("bucket"), col(idCol))
       .repartitionByRange(col("table"), col("bucket"))
       .sortWithinPartitions("table", "bucket")
-      .write.mode("overwrite").parquet(s"$dir/postings.parquet")
+      .write.mode("overwrite").parquet(s"$gen/postings.parquet")
     // base_tables is the one sizing input meta.parquet does not carry
     // (planes/tables are its DERIVED outputs): a rebuild re-runs the
     // occupancy sizing from the live count and needs the original request
-    Ivf.writeBuildInfo(spark, dir, n, Seq("base_tables" -> baseTables))
+    Ivf.writeBuildInfo(spark, gen, n, Seq("base_tables" -> baseTables))
   }
 
   /** Append new vectors to a built LSH index without resizing
@@ -601,17 +597,10 @@ object Similarity {
                      dir: String): Unit =
   IndexLifecycle.withIndexLock(emb.sparkSession, dir, "appendLshIndex") {
     val spark = emb.sparkSession
-    // recover interrupted swaps FIRST (dir-level, then file-level):
-    // mode("append") onto a mid-swap missing path would CREATE a fresh
-    // file holding only this batch and strand the whole pre-crash set
-    // in the sibling dirs — silent corpus loss, worse than the crash
-    // being recovered. Pointer-mode roots append INTO the live
-    // generation (Ivf.appendIndex's rationale; the committer caveat on
-    // IndexLifecycle's pointer-mode intro applies).
-    IndexLifecycle.recoverIndexDir(spark, dir)
+    // appends land INSIDE the live generation (Ivf.appendIndex's
+    // rationale; the committer caveat on IndexLifecycle's
+    // generation-root intro applies)
     val phys = IndexLifecycle.resolveIndexDir(spark, dir)
-    Seq("deletes.parquet", "postings.parquet", "vectors.parquet")
-      .foreach(n => IndexLifecycle.recoverSwap(spark, s"$phys/$n"))
     val meta = spark.read.parquet(s"$phys/meta.parquet").head()
     val (planes, tables, dim, seed) =
       (meta.getAs[Int]("planes"), meta.getAs[Int]("tables"),
@@ -641,8 +630,8 @@ object Similarity {
     // re-insert contract: appending an id that was tombstoned by
     // IndexLifecycle.removeIds un-deletes it — without this the append
     // would land physically but lshVectors would keep filtering it out
-    // until compaction. All the guard-interaction rules (swap only when
-    // the batch intersects the set; crash-safe tmp+rename swap) live in
+    // until compaction. All the guard-interaction rules (rewrite only
+    // when the batch intersects the set; a generation flip) live in
     // the ONE shared implementation — this used to be an inlined copy
     // that could silently diverge from the cell layouts' (ADVICE r18).
     IndexLifecycle.undeleteTombstones(spark, phys, batch.select(col(idCol)), idCol)
@@ -729,13 +718,6 @@ object Similarity {
                                 dir: String, idCol: String,
                                 deleteBroadcastLimit: Long =
                                   Dedup.HotShingleBroadcastLimit): DataFrame = {
-    // a crash between swapInParquet's two renames leaves the live path
-    // missing — for deletes.parquet that would read as "no tombstones"
-    // (silent resurrection), for postings/vectors a loud missing-path
-    // error; every LSH read passes through here, so complete/roll back
-    // any interrupted swap for all three swappable artifacts first
-    Seq("deletes.parquet", "postings.parquet", "vectors.parquet")
-      .foreach(n => IndexLifecycle.recoverSwap(spark, s"$dir/$n"))
     IndexLifecycle.minusTombstones(spark, dir,
       spark.read.parquet(s"$dir/vectors.parquet"), idCol,
       deleteBroadcastLimit)
@@ -838,7 +820,6 @@ object Similarity {
                     multiProbe: Int = 0,
                     selector: Option[DataFrame] = None): DataFrame =
   IndexLifecycle.fencedProbeResolved(spark, dir) { phys =>
-    IndexLifecycle.recoverIndexDir(spark, phys)
     val meta = spark.read.parquet(s"$phys/meta.parquet").head()
     val (planes, tables, dim, seed) =
       (meta.getAs[Int]("planes"), meta.getAs[Int]("tables"),
@@ -875,9 +856,6 @@ object Similarity {
               .map(ps => (t, ps.foldLeft(buckets(t))((b, p) => b ^ (1 << p))))
         }.distinct
       }
-    // vectors FIRST: lshVectors recovers interrupted swaps for all three
-    // artifacts, and spark.read resolves the postings file listing
-    // eagerly — reading before recovery would throw on a mid-swap path.
     // The selector rides the vectors choke point exactly like the
     // tombstone filter — postings stay unfiltered (stale hits just
     // match nothing).
@@ -934,7 +912,6 @@ object Similarity {
                          multiProbe: Int = 0,
                          selector: Option[DataFrame] = None): DataFrame =
   IndexLifecycle.fencedProbeResolved(spark, dir) { phys =>
-    IndexLifecycle.recoverIndexDir(spark, phys)
     val meta = spark.read.parquet(s"$phys/meta.parquet").head()
     val (planes, tables, dim, seed) =
       (meta.getAs[Int]("planes"), meta.getAs[Int]("tables"),
@@ -958,8 +935,6 @@ object Similarity {
           .select((col("pos") / lit(stride)).cast("int").as("table"),
             col("bucket"), col("query_id"))
       }
-    // vectors first — lshVectors runs swap recovery before the eager
-    // postings listing (probeLshIndex's rationale)
     val vectors = applySelector(lshVectors(spark, phys, idCol), selector, idCol)
     val qIdx = broadcast(qPairsDf)
     val postings = spark.read.parquet(s"$phys/postings.parquet")

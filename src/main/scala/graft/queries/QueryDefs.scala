@@ -35,9 +35,9 @@ object QueryDefs {
     * sf0.01 and sf0.1 never share an index; the marker is written only
     * after a completed build, so a crashed build rebuilds. */
   private def ensureServeIndex(s: SparkSession, d: String, kind: String): String = {
-    // v4 = index layout version (v4: buildinfo.parquet carries the
-    // requested build parameters — rebuildIndex's persisted defaults):
-    // bump when any persisted schema changes.
+    // v5 = index layout version (v5: every index is a generation root —
+    // an older plain dir is never read as a root): bump when any
+    // persisted schema changes.
     // The dir is ALSO keyed by a corpus fingerprint (total bytes ⊕
     // rotated max-mtime ⊕ file count of the embeddings table), so a
     // regenerated corpus at the same path gets a fresh build instead of
@@ -51,7 +51,7 @@ object QueryDefs {
         java.lang.Long.rotateLeft(
           if (stats.isEmpty) 0L else stats.map(_.getModificationTime).max, 21) ^
         stats.length.toLong)
-    val dir = s"/tmp/graft_ann_serve_v4_${Integer.toHexString(d.hashCode)}_$fp/$kind"
+    val dir = s"/tmp/graft_ann_serve_v5_${Integer.toHexString(d.hashCode)}_$fp/$kind"
     val marker = new org.apache.hadoop.fs.Path(s"$dir/_GRAFT_INDEX_OK")
     val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(marker)) {
@@ -65,12 +65,6 @@ object QueryDefs {
         case "ivf" => Ivf.buildIndex(corpus, "vec_id", "embedding", dir)
         case "pq"  => Quantize.buildPqIndex(corpus, "vec_id", "embedding", dir)
         case "lsh" => Similarity.buildLshIndex(corpus, "vec_id", "embedding", dir)
-        // the copy+delete-store deployment mode (r20): same IVF build,
-        // published as a committed generation under a pointer root —
-        // probes resolve the pointer inside their fence harness
-        case "ptr" => IndexLifecycle.buildIndexGeneration(s, dir) { gen =>
-          Ivf.buildIndex(corpus, "vec_id", "embedding", gen); ()
-        }
       }
       fs.create(marker, true).close()
     }
@@ -82,8 +76,8 @@ object QueryDefs {
     * corpus, append the other half (appended_fraction ~0.5 — exactly the
     * finding-29 retrain threshold), then [[IndexLifecycle.rebuildIndex]]
     * retrains from the index's own rows. The marker lives OUTSIDE the
-    * index dir because the whole-dir swap replaces it; it is written
-    * only after a completed rebuild, so a crash rebuilds. The per-run
+    * index root and is written only after a completed rebuild, so a
+    * crash rebuilds. The per-run
     * query cost is the stats readout, not the training. */
   private def ensureRebuiltIndex(s: SparkSession, d: String): String = {
     val base = ensureServeIndex(s, d, "ivf")  // forces the shared parent dir
@@ -143,7 +137,7 @@ object QueryDefs {
     * then hit warm fixtures, the same way ScaleBench pre-materializes
     * its pair corpora. */
   def warmServeFixtures(s: SparkSession, d: String): Unit = {
-    Seq("ivf", "pq", "lsh", "ptr").foreach(kind => ensureServeIndex(s, d, kind))
+    Seq("ivf", "pq", "lsh").foreach(kind => ensureServeIndex(s, d, kind))
     ensureRebuiltIndex(s, d)
     ensureTombIndex(s, d)
   }
@@ -1945,25 +1939,6 @@ FROM dwc JOIN wl USING (word) GROUP BY doc_id"""
       None
     ),
 
-    // POINTER-MODE serve (r20): the same IVF probe against an index
-    // deployed for copy+delete object stores — a committed generation
-    // under a pointer root, resolved per probe inside the fence
-    // harness (the bench row prices the resolution: one marker check +
-    // one commit LIST over the plain probe). Rows-only for the same
-    // KMeans reason as c14_ann_serve; PointerModeLifecycleSpec pins
-    // probe answers EQUAL to the same-seed plain-dir index, zero
-    // protocol renames across the whole lifecycle, and exactly-one-
-    // world reads under a torn copy+delete rename fake.
-    QueryDef(
-      "c14_ann_serve_pointer",
-      (s, d) => {
-        val dir = ensureServeIndex(s, d, "ptr")
-        Ivf.probeIndex(s, dir, "vec_id", "embedding",
-          t(s, d, "embeddings").filter(col("vec_id") === 0), "embedding", k = 10)
-      },
-      None
-    ),
-
     // The LSH arm of the serve split: no training at all — the one
     // corpus-sized cost (the signature projection) is paid at build;
     // the probe recomputes the query's buckets from the persisted
@@ -2065,13 +2040,13 @@ FROM dwc JOIN wl USING (word) GROUP BY doc_id"""
     ),
 
     // The DELETION-VECTOR lifecycle on a cell layout (r16): tombstoned
-    // scattered remove (O(batch) append — the physical verb pays
+    // scattered remove (a flip of the small tombstone set — the physical verb pays
     // min(batch, cells) cell rewrites, PERF finding 32), probe serving
     // the survivors through the anti-join rider, compaction applying
     // the backlog physically and clearing it. Cross-run stable: later
     // runs re-tombstone already-removed ids (no-op) and compact a clean
     // dir. Rows-only (KMeans cells); IndexLifecycleSpec pins
-    // union-probe equality, O(batch) no-rewrite, re-insert un-delete,
+    // union-probe equality, no cell rewrite, re-insert un-delete,
     // rebuild-applies, and the maintenance threshold on both cell
     // layouts.
     QueryDef(
@@ -2181,7 +2156,7 @@ FROM dwc JOIN wl USING (word) GROUP BY doc_id"""
         val dir = ensureServeIndex(s, d, "ivf")
         val emb = t(s, d, "embeddings")
         // annProbeStream on a batch frame is a SIXTH lock-free probe
-        // over a swappable dir, and its plan stays lazy (a range result
+        // over a flipping root, and its plan stays lazy (a range result
         // has no k bound to collect under) — so THIS serve surface runs
         // the reader harness itself: materialize inside fencedProbe,
         // never hand the caller a lazy plan that outlives the fence

@@ -183,9 +183,7 @@ object Streaming {
     * `deletes.parquet` and fails the query when a
     * [[graft.ops.IndexLifecycle.removeIds]] (or a compaction's backlog
     * clear) landed mid-stream — restart to serve the new tombstone set
-    * (spec-pinned, both tombstoning arms). `tombstoneGuard = false`
-    * opts out (restoring silent-stale-until-restart) for topologies
-    * with an external freshness protocol; per-batch guard cost is one
+    * (spec-pinned, both tombstoning arms); per-batch guard cost is one
     * 1-task LIST job (LifecycleSweep's stream-guard row).
     *
     * Per-arrival top-k needs a per-query rank (an aggregation — blocked
@@ -199,31 +197,22 @@ object Streaming {
   def annProbeStream(docs: DataFrame, idCol: String, vecCol: String,
                      indexDir: String, tau: Double,
                      nprobe: Int = 4, multiProbe: Int = 0,
-                     selector: Option[DataFrame] = None,
-                     tombstoneGuard: Boolean = true): DataFrame = {
+                     selector: Option[DataFrame] = None): DataFrame = {
     val spark = docs.sparkSession
-    val q0 = docs.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-    // self-heal a rebuild crashed mid whole-dir swap BEFORE the layout
-    // dispatch below — a missing dir would otherwise misroute an LSH
-    // index (no meta.parquet visible) onto the cell arm
-    graft.ops.IndexLifecycle.recoverIndexDir(spark, indexDir)
-    // pointer-mode roots resolve ONCE at plan time — the same
+    // the committed generation resolves ONCE at plan time — the same
     // plan-snapshot contract as the file listing itself: a generation
     // flip (rebuild/compaction) mid-stream deletes this generation's
     // files and the stream fails LOUDLY on its next micro-batch, the
-    // existing rebuild restart contract
+    // rebuild restart contract
     val dir = graft.ops.IndexLifecycle.resolveIndexDir(spark, indexDir)
-    // freshness guard epoch captured AFTER recovery (a recovery rename
-    // must not read as a mid-stream remove) and BEFORE the arms resolve
-    // tombstones below (a remove landing in between trips one
-    // conservative loud restart, never hides) — then broadcast-joined
-    // onto the STREAM side so every micro-batch re-runs the check
-    val q =
-      if (tombstoneGuard)
-        q0.join(broadcast(
-            graft.ops.IndexLifecycle.tombstoneFreshnessGuard(spark, dir)))
-          .drop("__tombstones_fresh")
-      else q0
+    // freshness guard epoch captured BEFORE the arms resolve tombstones
+    // below (a remove landing in between trips one conservative loud
+    // restart, never hides) — then broadcast-joined onto the STREAM side
+    // so every micro-batch re-runs the check
+    val q = docs.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
+      .join(broadcast(
+        graft.ops.IndexLifecycle.tombstoneFreshnessGuard(spark, dir)))
+      .drop("__tombstones_fresh")
     // layout resolved ONCE, driver-side, at plan time (the cellSource
     // rule): an LSH dir (Similarity.buildLshIndex) carries meta.parquet +
     // postings/vectors; the cell layouts carry centroids.parquet +
@@ -234,7 +223,7 @@ object Streaming {
     if (graft.ops.Ivf.layoutFileExists(spark, dir, "meta.parquet"))
       return lshProbeStream(spark, q, idCol, vecCol, dir, tau, multiProbe,
         selector)
-    val model = graft.ops.Ivf.loadIndexModel(spark, dir)
+    val model = graft.ops.Ivf.readIndexModel(spark, dir)
     // selector (FAISS IDSelector analog, a STATIC frame): per-tenant
     // filtered tagging at ingest — rides the static side's choke point
     // exactly like the batch probes', resolved once at plan time
@@ -286,10 +275,9 @@ object Streaming {
         meta.getAs[Int]("dim"), meta.getAs[Long]("seed"))
     // tombstone-aware (IndexLifecycle.removeIds): removed ids must not
     // tag arrivals even before compaction applies them physically; the
-    // selector composes on the same choke point. vectors resolve FIRST —
-    // lshVectors runs swap recovery before the eager postings listing.
-    // Both resolve at PLAN time: a removeIds landing while the stream
-    // RUNS touches no file this plan lists — the stream-side freshness
+    // selector composes on the same choke point. Both resolve at PLAN
+    // time: a removeIds landing while the stream RUNS touches no file
+    // this plan lists — the stream-side freshness
     // guard (attached by annProbeStream before dispatching here) is what
     // turns that into a loud per-batch failure; spec-pinned in
     // StreamingSpec's loud-or-fresh test together with the cell arm's

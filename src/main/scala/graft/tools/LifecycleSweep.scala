@@ -11,11 +11,11 @@ import graft.ops.{Dedup, Ivf, IndexLifecycle, Similarity}
   *    FIXED 500-id removal batch. The call has two cost terms: the
   *    affected-cell DISCOVERY (a column-pruned id⋈cell semi-join over
   *    the inverted file — linear in corpus bytes but reads two columns)
-  *    and the dynamic-partition REWRITE (bounded by the affected cells'
-  *    content — the increment-sized claim). A second remove of ids NOT
-  *    in the index isolates the discovery term (no cells match, so no
-  *    rewrite happens): rewrite = t(remove) − t(noop remove), and THAT
-  *    difference must stay increment-sized across rungs.
+  *    and the new GENERATION (the affected cells rewrite through Spark,
+  *    every other cell copies over — the copy is linear in the index,
+  *    finding 41). A second remove of ids NOT in the index isolates the
+  *    discovery term (no cells match, so no generation is written):
+  *    rewrite = t(remove) − t(noop remove).
   *
   *  - **occupancy-sized multi-probe** ([[Similarity.multiProbeFor]]):
   *    the sized q and the measured candidate volume per rung — the
@@ -56,7 +56,7 @@ object LifecycleSweep {
       // measured claim — the remove wall is.
       val ivfDir = s"/tmp/graft_lcs_ivf_x$k"
       // a crashed previous sweep leaves the build lock orphaned (single-
-      // driver tool; the dir is rebuilt from scratch every run anyway)
+      // driver tool; every run builds a fresh generation anyway)
       IndexLifecycle.clearLock(spark, ivfDir)
       val (tBuild, _) = timeIt {
         Ivf.buildIndex(emb, "vec_id", "embedding", ivfDir,
@@ -66,11 +66,11 @@ object LifecycleSweep {
       // affected cells, computed untimed (removeIds re-derives them
       // inside the timed call)
       def affectedCells(b: DataFrame): Long =
-        spark.read.parquet(s"$ivfDir/invfile.parquet")
+        spark.read.parquet(s"${IndexLifecycle.resolveIndexDir(spark, ivfDir)}/invfile.parquet")
           .join(broadcast(b), Seq("vec_id"), "left_semi")
           .select("cell").distinct().count()
-      val cellsTotal = spark.read.parquet(s"$ivfDir/invfile.parquet")
-        .select("cell").distinct().count()
+      val cellsTotal = IndexLifecycle.indexStats(spark, ivfDir).head()
+        .getAs[Long]("cells")
       // SMALL fixed batch first (16 ids — the increment-sized regime the
       // removeIds contract is written for: affected ≤ 16 cells no matter
       // the corpus), then the 500-id batch (scattered ids touch
@@ -105,17 +105,18 @@ object LifecycleSweep {
 
       // ── occupancy-sized multi-probe ──────────────────────────────────
       val lshDir = s"/tmp/graft_scale_lsh_x$k"
-      if (!new java.io.File(s"$lshDir/meta.parquet").exists())
+      if (IndexLifecycle.resolvePointer(spark, lshDir).isEmpty)
         Similarity.buildLshIndex(emb.filter(col("vec_id") =!= 0),
           "vec_id", "embedding", lshDir)
-      val meta = spark.read.parquet(s"$lshDir/meta.parquet").head()
+      val lshGen = IndexLifecycle.resolveIndexDir(spark, lshDir)
+      val meta = spark.read.parquet(s"$lshGen/meta.parquet").head()
       val (planes, tables, dim, seed) =
         (meta.getAs[Int]("planes"), meta.getAs[Int]("tables"),
           meta.getAs[Int]("dim"), meta.getAs[Long]("seed"))
       val sizedQ = Similarity.multiProbeFor(spark, lshDir)
       // measured candidate volume at the sized q, averaged over 5
       // queries — the same (table, bucket)-pair set probeLshIndex scans
-      val postings = spark.read.parquet(s"$lshDir/postings.parquet")
+      val postings = spark.read.parquet(s"$lshGen/postings.parquet")
       val qVecs = emb.filter(col("vec_id") < 5)
         .select(col("embedding").cast("array<double>")).collect()
         .map(_.getSeq[Double](0).toArray)
@@ -191,8 +192,8 @@ object LifecycleSweep {
 
       // ── tombstoned scattered remove (r15 verdict #3) ────────────────
       // a SECOND scattered 500-id batch through the tombstone verb: the
-      // write must be flat in batch size (an O(batch) append — never
-      // min(batch, cells) cell rewrites); the probe pays the anti-join
+      // write must be flat in batch size (a flip of the small tombstone
+      // set — never min(batch, cells) cell rewrites); the probe pays the anti-join
       // rider; compaction carries the DEFERRED rewrite on its own
       // cadence. Compare tRmTomb against rm500 (the physical wall).
       val tombBatch = emb.filter(col("vec_id") >= 2001 && col("vec_id") <= 2500)
@@ -230,8 +231,8 @@ object LifecycleSweep {
 
       // batch-size dimension at the LARGEST rung only (the other half of
       // the verdict's claim: the tombstone write is flat in BATCH SIZE —
-      // an O(batch) append of a few-KB id frame whose wall is job
-      // overhead, not data — as well as flat in touched-cell count):
+      // a rewrite of a few-KB id set whose wall is job overhead, not
+      // data — as well as flat in touched-cell count):
       // disjoint scattered batches of 100 / 1000 / 4000 ids
       if (k == ks.max) {
         var lo = 10000L
@@ -249,20 +250,19 @@ object LifecycleSweep {
 
         // ── streaming tombstone-freshness guard cost (r17 verdict #2):
         // the per-micro-batch price of the loud-or-fresh contract —
-        // median probe-stream batch wall with the guard on vs off (the
-        // same annProbeStream plan either way), plus the guard frame's
+        // median probe-stream batch wall, plus the guard frame's
         // standalone 1-task LIST job. Largest rung only: the guard cost
         // is corpus-INDEPENDENT by construction (one fs listing), so one
         // rung suffices and the biggest index is the honest backdrop.
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
         val qv = emb.filter(col("vec_id") === 1).select("embedding")
           .head().getSeq[Float](0)
-        def medianBatch(guardOn: Boolean): Double = {
+        val batchMed = {
           val mem = org.apache.spark.sql.execution.streaming
             .runtime.MemoryStream[(Long, Seq[Float])]
           val q = graft.streaming.Streaming.annProbeStream(
               mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-              ivfDir, tau = 0.2, nprobe = 16, tombstoneGuard = guardOn)
+              ivfDir, tau = 0.2, nprobe = 16)
             .writeStream.format("noop").start()
           try {
             val walls = (1 to 21).map { i =>
@@ -273,15 +273,12 @@ object LifecycleSweep {
             walls(walls.length / 2)
           } finally q.stop()
         }
-        val onMed = medianBatch(guardOn = true)
-        val offMed = medianBatch(guardOn = false)
         val guardJobs = (1 to 20).map { _ =>
           val g = IndexLifecycle.tombstoneFreshnessGuard(spark, ivfDir)
           val (t, _) = timeIt { g.collect(); 0L }
           t
         }.sorted
-        println(f"[lcs] x$k%-2d stream-guard: batch on=$onMed%5.3fs " +
-          f"off=$offMed%5.3fs delta=${onMed - offMed}%+6.3fs " +
+        println(f"[lcs] x$k%-2d stream-guard: batch=$batchMed%5.3fs " +
           f"guardJob=${guardJobs(guardJobs.length / 2)}%5.3fs (medians of 20)")
       }
     }

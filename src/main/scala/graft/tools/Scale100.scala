@@ -104,8 +104,8 @@ object Scale100 {
           sampleFraction = 0.25, maxIter = 5, hierarchicalThreshold = 64)
         0L
       }
-      val cellsTotal = spark.read.parquet(s"$ivfDir/invfile.parquet")
-        .select("cell").distinct().count()
+      val cellsTotal = IndexLifecycle.indexStats(spark, ivfDir).head()
+        .getAs[Long]("cells")
 
       // ── tombstoned scattered remove + compaction backlog ─────────────
       // the finding-32 claims at 4× the previous deepest rung: the
@@ -146,7 +146,7 @@ object Scale100 {
       // ── serve / filtered / range probes ──────────────────────────────
       val lshDir = s"/tmp/graft_scale_lsh_x$k"
       val tLshBuild =
-        if (new java.io.File(s"$lshDir/meta.parquet").exists()) -1.0 // cached
+        if (IndexLifecycle.resolvePointer(spark, lshDir).isDefined) -1.0 // cached
         else timeIt {
           Similarity.buildLshIndex(emb.filter(col("vec_id") =!= 0),
             "vec_id", "embedding", lshDir); 0L

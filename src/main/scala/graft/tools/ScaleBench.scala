@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Ivf, Quantize, Relational, Similarity, Text}
+import graft.ops.{Dedup, IndexLifecycle, Ivf, Quantize, Relational, Similarity, Text}
 
 /** Scaling evidence for the hot operator families: run jaccard near-dup, connected
   * components, near-dup removal, MinHash LSH, embedding-LSH ANN,
@@ -407,8 +407,8 @@ object ScaleBench {
       // quantizer assigns cells+codes, dynamic-partition append) — both
       // must stay ~flat: the batch probe scans probed cells only, the
       // append pays one assignment pass over the appended rows. The
-      // build above runs mode=overwrite each round, so appends never
-      // accumulate across rounds.
+      // build above commits a fresh generation each round, so appends
+      // never accumulate across rounds.
       val (tIvfPqServeB, _) = timeIt(noop(Ivf.probeIndexBatch(spark, ivfpqDir,
         "vec_id", "embedding", emb.filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 10)))
@@ -456,7 +456,7 @@ object ScaleBench {
             .select((col("vec_id") + lit(920000000L)).as("vec_id"),
               col("embedding")),
           "vec_id", "embedding", lshDir)
-        graft.ops.IndexLifecycle.rebuildIndex(spark, lshDir); 0L
+        IndexLifecycle.rebuildIndex(spark, lshDir); 0L
       }
       // serve-batch stage attribution: the batch's probed-cell UNION is
       // what defeats static pruning — record its size next to the join
@@ -490,16 +490,11 @@ object ScaleBench {
               col("embedding")),
           "vec_id", "embedding", ivfpqDir)
       }
-      def maxFilesPerCell: Int = {
-        val dirs = new java.io.File(s"$ivfpqDir/codes.parquet").listFiles()
-        if (dirs == null) 0
-        else dirs.filter(f => f.isDirectory && f.getName.startsWith("cell="))
-          .map(_.listFiles().count(_.getName.startsWith("part-")))
-          .foldLeft(0)(math.max)
-      }
+      def maxFilesPerCell: Int = IndexLifecycle.indexStats(spark, ivfpqDir)
+        .head().getAs[Int]("max_files_per_cell")
       val filesBeforeCompact = maxFilesPerCell
       val (tCompact, _) = timeIt {
-        graft.ops.IndexLifecycle.compactIndex(spark, ivfpqDir,
+        IndexLifecycle.compactIndex(spark, ivfpqDir,
           maxFilesPerCell = 2); 0L
       }
       val filesAfterCompact = maxFilesPerCell

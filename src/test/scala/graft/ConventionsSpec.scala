@@ -40,9 +40,21 @@ class ConventionsSpec extends AnyFunSuite {
     }
   }
 
+  /** Every filesystem rename (`.rename(` or `Files.move`) in the index
+    * code under `graft/ops`, as "path:line". Each index verb publishes
+    * a new generation and flips a commit pointer; a rename of live data
+    * is atomic only on HDFS and local disk. */
+  def renameCalls(sources: Seq[(String, String)]): Seq[String] = {
+    val call = """\.rename\(|\bFiles\.move\b""".r
+    for {
+      (path, text) <- sources if path.replace('\\', '/').contains("graft/ops/")
+      m <- call.findAllMatchIn(text)
+    } yield s"$path:${text.take(m.start).count(_ == '\n') + 1}"
+  }
+
   /** The programs `src/main` may hold, each with why it stays. */
   val AllowedMains: Map[String, String] = Map(
-    "graft.Bench" -> "the 158-query noop-sink bench and its floors",
+    "graft.Bench" -> "the 157-query noop-sink bench and its floors",
     "graft.Verify" -> "the correctness dump the DuckDB oracle compares",
     "graft.Demo" -> "the submit → status → preview → export walk-through",
     "graft.streaming.StreamingDemo" -> "streaming equals batch on the events table",
@@ -50,7 +62,6 @@ class ConventionsSpec extends AnyFunSuite {
     "graft.tools.Scale100" -> "the x100/x400 rungs of the headline columns",
     "graft.tools.CurationScale" -> "the scale rungs of the c24 curation compositions",
     "graft.tools.LifecycleSweep" -> "the scale rungs of the index lifecycle verbs",
-    "graft.tools.PtrSweep" -> "the scale rungs of pointer-mode against in-place verbs",
     "graft.tools.PlanDump" -> "the formatted-plan dumps under plans/")
 
   test("src/main defines exactly one SparkListener: the shared rung helper") {
@@ -62,6 +73,20 @@ class ConventionsSpec extends AnyFunSuite {
     assert(listenerDefinitions(planted).size == 2)
     // the listener's event types are not definitions
     assert(listenerDefinitions(Seq("x.scala" -> "def f(e: SparkListenerTaskEnd) = ()")).isEmpty)
+  }
+
+  test("the index code under graft/ops renames no file: every replace is a generation commit") {
+    assert(renameCalls(mainSources).isEmpty, renameCalls(mainSources))
+    // negative control: a planted rename swap and a planted move are caught
+    val planted = mainSources ++ Seq(
+      "src/main/scala/graft/ops/Swap.scala" ->
+        "object Swap {\n  def f(fs: FileSystem) = fs.rename(tmp, live)\n}",
+      "src/main/scala/graft/ops/Move.scala" ->
+        "object Move {\n  def f() = java.nio.file.Files.move(a, b)\n}")
+    assert(renameCalls(planted) ==
+      Seq("src/main/scala/graft/ops/Swap.scala:2", "src/main/scala/graft/ops/Move.scala:2"))
+    // the scan is scoped to the index code
+    assert(renameCalls(Seq("src/main/scala/graft/tools/X.scala" -> "fs.rename(a, b)")).isEmpty)
   }
 
   test("every program in src/main is on the allowlist") {

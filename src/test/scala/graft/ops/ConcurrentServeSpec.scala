@@ -4,10 +4,11 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Probes are LOCK-FREE while maintenance mutates (the r16 lease covers
-  * writers only): compaction swaps artifacts and clears tombstone
-  * backlogs under live readers, whose safety rests on reader-side swap
-  * recovery, the writer-side tolerated-promotion rules, and
-  * loadTombstones' raced-clear retry. This suite exercises that claim
+  * writers only): compaction and rebuild flip generations — GC-deleting
+  * the one being read — and tombstone removes flip the nested tombstone
+  * root under live readers, whose safety rests on the fenced probe
+  * harness's same-world fences and stale-file retry, and on
+  * loadTombstones' raced-flip retry. This suite exercises that claim
   * under real concurrency instead of trusting the reasoning: readers
   * hammer a dir while compaction runs; no reader may fail, and every
   * answer must be the (identical) pre- or post-compaction result. */
@@ -79,38 +80,8 @@ class ConcurrentServeSpec extends SparkSpec {
     assert(answers == Set(expect),
       s"probe answers drifted during compaction: ${answers.map(_.take(3))} vs ${expect.take(3)}")
     // and the compaction actually did its job under the hammer
-    assert(!new java.io.File(s"$dir/deletes.parquet").exists())
-  }
-
-  test("IVF probes survive a live REBUILD's whole-dir swap (self-heal to old or new, never fail)") {
-    // the harshest reader-vs-maintenance case: rebuildIndex replaces the
-    // ENTIRE dir through the two-rename swap. The retrained quantizer is
-    // a DIFFERENT (equally valid) model — the rebuild reads the
-    // cell-ordered invfile, so seeded KMeans sees a different partition
-    // layout than the original build — so readers may legitimately
-    // observe the old world or the new one, but nothing else, and no
-    // reader may fail. (Streams are the documented exception: their
-    // plan snapshot must fail loudly.)
-    val corpus = emb.localCheckpoint(true)
-    val query = corpus.filter($"vec_id" === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_conc_rb").toString + "/idx"
-    Ivf.buildIndex(corpus.filter($"vec_id" =!= 0), "vec_id", "embedding", dir, maxIter = 5)
-    def answer(): Seq[(Long, Double)] = Ivf.probeIndex(spark, dir, "vec_id",
-      "embedding", query, "embedding", k = 5)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val expectOld = answer()
-    val (errors, answers) = hammer(
-      readers = 3,
-      probe = () => answer(),
-      mutate = () => IndexLifecycle.rebuildIndex(spark, dir))
-    val expectNew = answer()
-    assert(errors.isEmpty,
-      s"a live probe failed during the whole-dir rebuild swap: ${errors.headOption}")
-    assert(answers.subsetOf(Set(expectOld, expectNew)),
-      s"a probe observed a MIXED world across the rebuild: " +
-        s"${(answers -- Set(expectOld, expectNew)).map(_.take(3))}")
-    assert(answers.contains(expectOld),
-      "no probe observed the old world — the hammer raced nothing")
+    assert(!new java.io.File(
+      s"${IndexLifecycle.resolveIndexDir(spark, dir)}/deletes.parquet").exists())
   }
 
   test("PQ probes survive a live compaction applying + clearing cell-layout tombstones (r16 verdict #6)") {
@@ -140,10 +111,11 @@ class ConcurrentServeSpec extends SparkSpec {
       s"a live PQ probe failed during compaction: ${errors.headOption}")
     assert(answers == Set(expect),
       s"PQ probe answers drifted during compaction: ${answers.map(_.take(3))}")
-    assert(!new java.io.File(s"$dir/deletes.parquet").exists())
+    assert(!new java.io.File(
+      s"${IndexLifecycle.resolveIndexDir(spark, dir)}/deletes.parquet").exists())
   }
 
-  test("BATCH IVF probes survive a live REBUILD's whole-dir swap (r16 verdict #6)") {
+  test("BATCH IVF probes survive a live REBUILD's generation flip (r16 verdict #6)") {
     // batch probes materialize |queries|·k rows (finishBatchTopK's two
     // checkpoints + the deficient-query count) — a longer materialize
     // window between the epoch capture and the same-world fence than
@@ -166,7 +138,7 @@ class ConcurrentServeSpec extends SparkSpec {
       mutate = () => IndexLifecycle.rebuildIndex(spark, dir))
     val expectNew = answer()
     assert(errors.isEmpty,
-      s"a live batch probe failed during the whole-dir rebuild swap: ${errors.headOption}")
+      s"a live batch probe failed during the rebuild flip: ${errors.headOption}")
     assert(answers.subsetOf(Set(expectOld, expectNew)),
       s"a batch probe observed a MIXED world across the rebuild: " +
         s"${(answers -- Set(expectOld, expectNew)).map(_.take(3))}")
@@ -201,11 +173,12 @@ class ConcurrentServeSpec extends SparkSpec {
       s"a live batch LSH probe failed during compaction: ${errors.headOption}")
     assert(answers == Set(expect),
       s"batch LSH answers drifted during compaction: ${answers.map(_.take(3))}")
-    assert(!new java.io.File(s"$dir/deletes.parquet").exists())
+    assert(!new java.io.File(
+      s"${IndexLifecycle.resolveIndexDir(spark, dir)}/deletes.parquet").exists())
   }
 
   test("POINTER MODE: probes survive a live rebuild's generation flip + old-generation GC") {
-    // the riskiest pointer-mode reader path: a probe resolves the
+    // the riskiest reader path: a probe resolves the
     // pointer, reads the generation's files — and the rebuild commits a
     // NEW generation and GC-DELETES the one being read. The probe must
     // either finish on the old world (it resolved and materialized
@@ -217,10 +190,8 @@ class ConcurrentServeSpec extends SparkSpec {
     val corpus = emb.localCheckpoint(true)
     val query = corpus.filter($"vec_id" === 0)
     val root = java.nio.file.Files.createTempDirectory("graft_conc_ptr").toString + "/idx"
-    IndexLifecycle.buildIndexGeneration(spark, root) { gen =>
-      Ivf.buildIndex(corpus.filter($"vec_id" =!= 0), "vec_id", "embedding",
-        gen, maxIter = 5)
-    }
+    Ivf.buildIndex(corpus.filter($"vec_id" =!= 0), "vec_id", "embedding",
+      root, maxIter = 5)
     def answer(): Seq[(Long, Double)] = Ivf.probeIndex(spark, root, "vec_id",
       "embedding", query, "embedding", k = 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -231,7 +202,7 @@ class ConcurrentServeSpec extends SparkSpec {
       mutate = () => IndexLifecycle.rebuildIndex(spark, root))
     val expectNew = answer()
     assert(errors.isEmpty,
-      s"a live probe failed during the pointer-mode generation flip: ${errors.headOption}")
+      s"a live probe failed during the generation flip: ${errors.headOption}")
     assert(answers.subsetOf(Set(expectOld, expectNew)),
       s"a probe observed a MIXED world across the generation flip: " +
         s"${(answers -- Set(expectOld, expectNew)).map(_.take(3))}")
@@ -239,7 +210,7 @@ class ConcurrentServeSpec extends SparkSpec {
       "no probe observed the old world — the hammer raced nothing")
     // the flip GC'd down to exactly the live generation
     val gens = new java.io.File(root).listFiles().map(_.getName)
-      .filter(n => n.startsWith("gen-") && !n.contains(".__"))
+      .filter(_.startsWith("gen-"))
     assert(gens.length == 1, s"stale generations survived the flip GC: ${gens.mkString(",")}")
   }
 
@@ -247,17 +218,15 @@ class ConcurrentServeSpec extends SparkSpec {
     val corpus = emb.localCheckpoint(true)
     val query = corpus.filter($"vec_id" === 0)
     val root = java.nio.file.Files.createTempDirectory("graft_conc_ptrc").toString + "/idx"
-    IndexLifecycle.buildIndexGeneration(spark, root) { gen =>
-      Ivf.buildIndex(corpus.filter($"vec_id" =!= 0), "vec_id", "embedding",
-        gen, maxIter = 5)
-    }
+    Ivf.buildIndex(corpus.filter($"vec_id" =!= 0), "vec_id", "embedding",
+      root, maxIter = 5)
     // victims OUTSIDE the top-k: both worlds answer identically, so any
     // drift the hammer sees is a real torn/mixed read
     val top = Ivf.probeIndex(spark, root, "vec_id", "embedding",
       query, "embedding", k = 20).select("vec_id").collect().map(_.getLong(0))
     val victims = corpus.filter(!$"vec_id".isin(top.map(java.lang.Long.valueOf): _*))
       .filter($"vec_id" =!= 0).limit(5).select("vec_id").localCheckpoint(true)
-    IndexLifecycle.removeIds(spark, root, victims, "vec_id") // ptr: always tombstones
+    IndexLifecycle.removeIds(spark, root, victims, "vec_id", tombstone = true)
     def answer(): Seq[(Long, Double)] = Ivf.probeIndex(spark, root, "vec_id",
       "embedding", query, "embedding", k = 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -267,9 +236,9 @@ class ConcurrentServeSpec extends SparkSpec {
       probe = () => answer(),
       mutate = () => IndexLifecycle.compactIndex(spark, root))
     assert(errors.isEmpty,
-      s"a live probe failed during the pointer-mode compaction flip: ${errors.headOption}")
+      s"a live probe failed during the compaction flip: ${errors.headOption}")
     assert(answers == Set(expect),
-      s"probe answers drifted during the pointer-mode compaction flip: ${answers.map(_.take(3))}")
+      s"probe answers drifted during the compaction flip: ${answers.map(_.take(3))}")
     // the flip IS the backlog clear
     assert(IndexLifecycle.indexStats(spark, root).head()
       .getAs[Long]("tombstones") == 0L)
@@ -296,14 +265,15 @@ class ConcurrentServeSpec extends SparkSpec {
       s"a live probe failed during cell compaction: ${errors.headOption}")
     assert(answers == Set(expect),
       s"probe answers drifted during cell compaction: ${answers.map(_.take(3))}")
-    assert(!new java.io.File(s"$dir/deletes.parquet").exists())
+    assert(!new java.io.File(
+      s"${IndexLifecycle.resolveIndexDir(spark, dir)}/deletes.parquet").exists())
   }
 
   test("POINTER MODE: a mid-probe mutation INSIDE the live generation trips the fence; the retry serves the new world (ADVICE r20)") {
     // The root epoch keys on commit files only, so it is deliberately
     // blind to everything but flips — which made it blind to a
     // removeIds/undeleteTombstones flip of the NESTED deletes.parquet
-    // pointer root and to append files landing inside the generation. A
+    // root and to append files landing inside the generation. A
     // probe racing such a mutation could serve the stale
     // supposedly-removed vector with NO retry (the finding-34 silent
     // mixed-world class). fencedProbeResolved now fences the RESOLVED
@@ -312,10 +282,8 @@ class ConcurrentServeSpec extends SparkSpec {
     val corpus = emb.localCheckpoint(true)
     val query = corpus.filter($"vec_id" === 0)
     val root = java.nio.file.Files.createTempDirectory("graft_conc_ptrm").toString + "/idx"
-    IndexLifecycle.buildIndexGeneration(spark, root) { gen =>
-      Ivf.buildIndex(corpus.filter($"vec_id" =!= 0), "vec_id", "embedding",
-        gen, maxIter = 5)
-    }
+    Ivf.buildIndex(corpus.filter($"vec_id" =!= 0), "vec_id", "embedding",
+      root, maxIter = 5)
     val expectOld = Ivf.probeIndex(spark, root, "vec_id", "embedding",
       query, "embedding", k = 5).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // victim INSIDE the current top-k: serving the pre-remove answer
@@ -325,7 +293,7 @@ class ConcurrentServeSpec extends SparkSpec {
       .select("vec_id").localCheckpoint(true)
     val calls = new java.util.concurrent.atomic.AtomicInteger(0)
     val out = IndexLifecycle.fencedProbeResolved(spark, root) { phys =>
-      val model = Ivf.loadIndexModel(spark, phys)
+      val model = Ivf.readIndexModel(spark, phys)
       val ans = Ivf.probeIndexFrame(
         IndexLifecycle.minusTombstones(spark, phys,
           spark.read.parquet(s"$phys/invfile.parquet"), "vec_id"),
@@ -335,7 +303,7 @@ class ConcurrentServeSpec extends SparkSpec {
       // answer — before the fix the fence passed and `ans` (containing
       // the removed id) was served
       if (calls.incrementAndGet() == 1)
-        IndexLifecycle.removeIds(spark, root, victims, "vec_id")
+        IndexLifecycle.removeIds(spark, root, victims, "vec_id", tombstone = true)
       ans
     }
     assert(calls.get() >= 2,
@@ -364,15 +332,13 @@ class ConcurrentServeSpec extends SparkSpec {
     val corpus = emb.localCheckpoint(true)
     val query = corpus.filter($"vec_id" === 0)
     val root = java.nio.file.Files.createTempDirectory("graft_conc_ptra").toString + "/idx"
-    IndexLifecycle.buildIndexGeneration(spark, root) { gen =>
-      Ivf.buildIndex(corpus.filter($"vec_id" =!= 0).filter($"vec_id" < 400),
-        "vec_id", "embedding", gen, maxIter = 5)
-    }
+    Ivf.buildIndex(corpus.filter($"vec_id" =!= 0).filter($"vec_id" < 400),
+      "vec_id", "embedding", root, maxIter = 5)
     val extra = corpus.filter($"vec_id" >= 400).limit(5)
       .select("vec_id", "embedding").localCheckpoint(true)
     val calls = new java.util.concurrent.atomic.AtomicInteger(0)
     val out = IndexLifecycle.fencedProbeResolved(spark, root) { phys =>
-      val model = Ivf.loadIndexModel(spark, phys)
+      val model = Ivf.readIndexModel(spark, phys)
       val ans = Ivf.probeIndexFrame(
         IndexLifecycle.minusTombstones(spark, phys,
           spark.read.parquet(s"$phys/invfile.parquet"), "vec_id"),
@@ -392,10 +358,8 @@ class ConcurrentServeSpec extends SparkSpec {
     val corpus = emb.localCheckpoint(true)
     val query = corpus.filter($"vec_id" === 0)
     val root = java.nio.file.Files.createTempDirectory("graft_conc_ptrr").toString + "/idx"
-    IndexLifecycle.buildIndexGeneration(spark, root) { gen =>
-      Ivf.buildIndex(corpus.filter($"vec_id" =!= 0), "vec_id", "embedding",
-        gen, maxIter = 5)
-    }
+    Ivf.buildIndex(corpus.filter($"vec_id" =!= 0), "vec_id", "embedding",
+      root, maxIter = 5)
     // victims OUTSIDE the top-k: both worlds answer identically, so any
     // drifted answer is a real mixed-world read, never an expected delta
     val top = Ivf.probeIndex(spark, root, "vec_id", "embedding",
@@ -408,7 +372,8 @@ class ConcurrentServeSpec extends SparkSpec {
       readers = 3,
       probe = () => Ivf.probeIndex(spark, root, "vec_id", "embedding",
         query, "embedding", k = 5).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq,
-      mutate = () => IndexLifecycle.removeIds(spark, root, victims, "vec_id"))
+      mutate = () => IndexLifecycle.removeIds(spark, root, victims, "vec_id",
+        tombstone = true))
     assert(errors.isEmpty,
       s"a live probe failed during the pointer-root tombstone flip: ${errors.headOption}")
     assert(answers == Set(expect),

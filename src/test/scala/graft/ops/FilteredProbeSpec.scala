@@ -180,9 +180,9 @@ class FilteredProbeSpec extends SparkSpec {
                             (pqDir, "codes.parquet"))) {
       val model = Ivf.loadIndexModel(spark, dir)
       val probedCells = model.probedCells(q, nprobe = 2)
-      val inv = spark.read.parquet(s"$dir/$file")
+      val inv = spark.read.parquet(s"${IndexLifecycle.resolveIndexDir(spark, dir)}/$file")
       val allFiles = inv.inputFiles.length
-      val cellDirs = new java.io.File(s"$dir/$file").listFiles()
+      val cellDirs = new java.io.File(s"${IndexLifecycle.resolveIndexDir(spark, dir)}/$file").listFiles()
         .count(_.getName.startsWith("cell="))
       assert(cellDirs > probedCells.length,
         s"$file: only $cellDirs cell dirs — partitioning missing")

@@ -16,6 +16,9 @@ class IndexLifecycleSpec extends SparkSpec {
   private def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
+  /** The committed generation of the index root `dir`. */
+  private def live(dir: String): String = IndexLifecycle.resolveIndexDir(spark, dir)
+
   test("IVF removeIds: probe equals the same-model probe over survivors; emptied cells vanish") {
     val corpus = emb.localCheckpoint(true)
     val query = corpus.filter($"vec_id" === 0)
@@ -26,18 +29,17 @@ class IndexLifecycleSpec extends SparkSpec {
       query, "embedding", k = 10))
     val removed = before.take(3).map(_._1)
     assert(removed.contains(0L), "planted self not in top-3 — corpus drifted?")
-    val affectedCells = spark.read.parquet(s"$dir/invfile.parquet")
+    val affectedCells = spark.read.parquet(s"${live(dir)}/invfile.parquet")
       .filter($"vec_id".isin(removed: _*)).select("cell").distinct()
       .collect().map(_.getInt(0)).toSet
     IndexLifecycle.removeIds(spark, dir, removed.toDF("vec_id"), "vec_id")
     // each REWRITTEN cell lands as ONE file (LifecycleSweep caught the
     // pre-r15 fan-out: one file per task holding the cell's rows = up to
     // shuffle-partition-many files per cell after a single remove —
-    // manufactured small-file pressure); untouched cells keep whatever
-    // the build wrote — consolidation is compactIndex's job, removal
-    // must only not make it worse
+    // manufactured small-file pressure); untouched cells carry over as
+    // the build wrote them
     affectedCells.foreach { c =>
-      val d = new java.io.File(s"$dir/invfile.parquet/cell=$c")
+      val d = new java.io.File(s"${live(dir)}/invfile.parquet/cell=$c")
       val nf = if (d.exists()) d.listFiles().count(_.getName.startsWith("part-")) else 0
       assert(nf <= 1, s"removeIds fanned cell=$c into $nf files")
     }
@@ -51,17 +53,17 @@ class IndexLifecycleSpec extends SparkSpec {
       model.indexOf(survivors, "vec_id", "embedding"), model,
       "vec_id", "embedding", query, "embedding", k = 10, nprobe = 4))
     assert(after == expect, s"post-remove probe diverged: $after vs $expect")
-    // emptying a whole cell must delete its directory — dynamic overwrite
-    // alone would leave the stale files in place
-    val inv = spark.read.parquet(s"$dir/invfile.parquet").localCheckpoint(true)
+    // emptying a whole cell leaves no directory for it in the new
+    // generation
+    val inv = spark.read.parquet(s"${live(dir)}/invfile.parquet").localCheckpoint(true)
     val someCell = inv.groupBy("cell").count().orderBy("count", "cell")
       .head().getInt(0)
     val cellIds = inv.filter($"cell" === someCell).select("vec_id")
       .collect().map(_.getLong(0))
     IndexLifecycle.removeIds(spark, dir, cellIds.toSeq.toDF("vec_id"), "vec_id")
-    assert(!new java.io.File(s"$dir/invfile.parquet/cell=$someCell").exists(),
+    assert(!new java.io.File(s"${live(dir)}/invfile.parquet/cell=$someCell").exists(),
       s"emptied cell=$someCell directory survived")
-    assert(spark.read.parquet(s"$dir/invfile.parquet")
+    assert(spark.read.parquet(s"${live(dir)}/invfile.parquet")
       .filter($"cell" === someCell).count() == 0L, "stale rows in emptied cell")
     // removing ids that are not present is a no-op, as in FAISS
     val snapshot = pairs(Ivf.probeIndex(spark, dir, "vec_id", "embedding",
@@ -76,7 +78,7 @@ class IndexLifecycleSpec extends SparkSpec {
     val query = corpus.filter($"vec_id" === 0)
     val dir = java.nio.file.Files.createTempDirectory("graft_lc_pq").toString
     Quantize.buildPqIndex(corpus, "vec_id", "embedding", dir, m = 4)
-    val codesBefore = spark.read.parquet(s"$dir/codes.parquet").localCheckpoint(true)
+    val codesBefore = spark.read.parquet(s"${live(dir)}/codes.parquet").localCheckpoint(true)
     val before = pairs(Quantize.probePqIndex(spark, dir, "vec_id", "embedding",
       query, "embedding", k = 10))
     val removed = before.take(3).map(_._1)
@@ -120,18 +122,18 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(tombstoned == fresh, s"tombstone probe diverged: $tombstoned vs $fresh")
     // compaction applies tombstones physically and clears them; the probe
     // is unchanged and the postings physically shrink
-    val postingsBefore = spark.read.parquet(s"$dir/postings.parquet").count()
+    val postingsBefore = spark.read.parquet(s"${live(dir)}/postings.parquet").count()
     IndexLifecycle.compactIndex(spark, dir)
-    assert(!new java.io.File(s"$dir/deletes.parquet").exists(),
+    assert(!new java.io.File(s"${live(dir)}/deletes.parquet").exists(),
       "compaction left the tombstone set behind")
     val compacted = pairs(Similarity.probeLshIndex(spark, dir,
       "vec_id", "embedding", query, "embedding", k = 10))
     assert(compacted == tombstoned, s"compaction changed the probe: $compacted")
-    assert(spark.read.parquet(s"$dir/postings.parquet").count() < postingsBefore,
+    assert(spark.read.parquet(s"${live(dir)}/postings.parquet").count() < postingsBefore,
       "compaction did not drop the removed postings")
     // row-group pruning survives the rewrite: the probe filter still
     // pushes a non-empty payload into the compacted postings scan
-    val plan = spark.read.parquet(s"$dir/postings.parquet")
+    val plan = spark.read.parquet(s"${live(dir)}/postings.parquet")
       .filter(col("table") === 0 && col("bucket") === 1)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [") && plan.contains("EqualTo"),
@@ -168,12 +170,12 @@ class IndexLifecycleSpec extends SparkSpec {
     Similarity.buildLshIndex(corpus.filter($"vec_id" =!= 3), "vec_id", "embedding", dir)
     val three = corpus.filter($"vec_id" === 3).localCheckpoint(true)
     // reproduce the torn state: the verb's own postings write, no vectors
-    val meta = spark.read.parquet(s"$dir/meta.parquet").head()
+    val meta = spark.read.parquet(s"${live(dir)}/meta.parquet").head()
     Similarity.lshIndex(three, "vec_id", "embedding",
         meta.getAs[Int]("tables"), meta.getAs[Int]("planes"),
         meta.getAs[Int]("dim"), meta.getAs[Long]("seed"))
       .select(col("table"), col("bucket"), col("vec_id"))
-      .write.mode("append").parquet(s"$dir/postings.parquet")
+      .write.mode("append").parquet(s"${live(dir)}/postings.parquet")
     // bucketed probe AND the k-starved exact fallback agree: id 3 absent
     val bucketed = pairs(Similarity.probeLshIndex(spark, dir, "vec_id",
       "embedding", query, "embedding", k = 10)).map(_._1)
@@ -203,7 +205,7 @@ class IndexLifecycleSpec extends SparkSpec {
         $"vec_id" < 400 + (i + 1) * 20), "vec_id", "embedding", dir)
     }
     def filesPerCell: Map[String, Int] =
-      new java.io.File(s"$dir/invfile.parquet").listFiles()
+      new java.io.File(s"${live(dir)}/invfile.parquet").listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("cell="))
         .map(d => d.getName ->
           d.listFiles().count(_.getName.startsWith("part-"))).toMap
@@ -249,11 +251,11 @@ class IndexLifecycleSpec extends SparkSpec {
       si.getAs[Long]("live_rows") == expectIds.size &&
       si.getAs[Long]("built_rows") == expectIds.size &&
       si.getAs[Double]("appended_fraction") == 0.0, s"stats not reset: $si")
-    val inv = spark.read.parquet(s"$ivfDir/invfile.parquet").localCheckpoint(true)
+    val inv = spark.read.parquet(s"${live(ivfDir)}/invfile.parquet").localCheckpoint(true)
     assert(inv.select("vec_id").collect().map(_.getLong(0)).toSet == expectIds,
       "rebuilt inverted file lost or invented rows")
     // written cells must match the written centroids — the mixed-artifact
-    // hazard the whole-dir swap exists to prevent: re-assigning the
+    // hazard the one-commit rebuild exists to prevent: re-assigning the
     // rebuilt rows under the rebuilt model must reproduce the cell column
     val model = Ivf.loadIndexModel(spark, ivfDir)
     val reassigned = model.indexOf(inv.select("vec_id", "embedding"),
@@ -277,7 +279,7 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(sp.getAs[String]("layout") == "pq" &&
       sp.getAs[Long]("live_rows") == n &&
       sp.getAs[Double]("appended_fraction") == 0.0, s"PQ stats not reset: $sp")
-    assert(spark.read.parquet(s"$pqDir/books.parquet")
+    assert(spark.read.parquet(s"${live(pqDir)}/books.parquet")
       .agg(countDistinct($"j")).head().getLong(0) == 4L,
       "rebuild dropped the persisted PQ geometry")
     assert(pairs(Quantize.probePqIndex(spark, pqDir, "vec_id", "embedding",
@@ -296,14 +298,14 @@ class IndexLifecycleSpec extends SparkSpec {
     val lshDir = java.nio.file.Files.createTempDirectory("graft_rb_lsh").toString
     Similarity.buildLshIndex(big.filter($"vec_id" <= 300), "vec_id",
       "embedding", lshDir)
-    val planesBefore = spark.read.parquet(s"$lshDir/meta.parquet")
+    val planesBefore = spark.read.parquet(s"${live(lshDir)}/meta.parquet")
       .head().getAs[Int]("planes")
     Similarity.appendLshIndex(big.filter($"vec_id" > 300), "vec_id",
       "embedding", lshDir)
     IndexLifecycle.removeIds(spark, lshDir,
       Seq(2999L, 3000L).toDF("vec_id"), "vec_id")
     IndexLifecycle.rebuildIndex(spark, lshDir)
-    val planesAfter = spark.read.parquet(s"$lshDir/meta.parquet")
+    val planesAfter = spark.read.parquet(s"${live(lshDir)}/meta.parquet")
       .head().getAs[Int]("planes")
     assert(planesAfter == Similarity.probePlanesFor(2998L) &&
       planesAfter > planesBefore,
@@ -402,7 +404,7 @@ class IndexLifecycleSpec extends SparkSpec {
 
     // a pre-counter dir (no buildinfo) must never rebuild on a guess
     val (fs, bi) = {
-      val p = new org.apache.hadoop.fs.Path(s"$lshDir/buildinfo.parquet")
+      val p = new org.apache.hadoop.fs.Path(s"${live(lshDir)}/buildinfo.parquet")
       (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
     }
     fs.delete(bi, true)
@@ -430,9 +432,9 @@ class IndexLifecycleSpec extends SparkSpec {
     // the whole build is the worst case — fraction 0.5). Materialize the
     // copy first: appending into a path while lazily reading it races
     // the scan's file listing.
-    val copy = spark.read.parquet(s"$dir/postings.parquet")
+    val copy = spark.read.parquet(s"${live(dir)}/postings.parquet")
       .localCheckpoint(true)
-    copy.write.mode("append").parquet(s"$dir/postings.parquet")
+    copy.write.mode("append").parquet(s"${live(dir)}/postings.parquet")
     assert(stats(dir).getAs[Double]("postings_dup_fraction") == 0.5,
       s"full re-post must read as fraction 0.5: ${stats(dir)}")
     assert(pairs(Similarity.probeLshIndex(spark, dir, "vec_id",
@@ -464,11 +466,11 @@ class IndexLifecycleSpec extends SparkSpec {
     // compaction collapses exact-duplicate rows so a later rebuild
     // never trains on them
     val n = corpus.count()
-    val vCopy = spark.read.parquet(s"$dir/vectors.parquet")
+    val vCopy = spark.read.parquet(s"${live(dir)}/vectors.parquet")
       .localCheckpoint(true)
-    vCopy.write.mode("append").parquet(s"$dir/vectors.parquet")
-    spark.read.parquet(s"$dir/postings.parquet").localCheckpoint(true)
-      .write.mode("append").parquet(s"$dir/postings.parquet")
+    vCopy.write.mode("append").parquet(s"${live(dir)}/vectors.parquet")
+    spark.read.parquet(s"${live(dir)}/postings.parquet").localCheckpoint(true)
+      .write.mode("append").parquet(s"${live(dir)}/postings.parquet")
     assert(stats(dir).getAs[Long]("live_rows") == 2 * n,
       "vectors duplication fixture did not take")
     assert(pairs(Similarity.probeLshIndex(spark, dir, "vec_id",
@@ -506,7 +508,7 @@ class IndexLifecycleSpec extends SparkSpec {
       IndexLifecycle.indexStats(spark, dir).head()
     // IVF: fresh build → appended_fraction 0; append half the built size
     // → fraction = appended/(built+appended); remove → fraction clamps,
-    // live drops, tombstones stay 0 (cell removes are physical)
+    // live drops, tombstones stay 0 (default cell removes compact at once)
     val ivfDir = java.nio.file.Files.createTempDirectory("graft_st_ivf").toString
     val nBuilt = n / 2
     Ivf.buildIndex(corpus.filter($"vec_id" < nBuilt), "vec_id", "embedding",
@@ -529,7 +531,7 @@ class IndexLifecycleSpec extends SparkSpec {
       corpus.filter($"vec_id" < 5).select("vec_id"), "vec_id")
     val s2 = stats(ivfDir)
     assert(s2.getAs[Long]("live_rows") == nBuilt + nApp - 5)
-    assert(s2.getAs[Long]("tombstones") == 0L, "cell-layout removes are physical")
+    assert(s2.getAs[Long]("tombstones") == 0L, "a default cell-layout remove left a backlog")
     // PQ layout reports itself
     val pqDir = java.nio.file.Files.createTempDirectory("graft_st_pq").toString
     Quantize.buildPqIndex(corpus, "vec_id", "embedding", pqDir, m = 4)
@@ -556,7 +558,7 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(l2.getAs[Long]("tombstones") == 0L && l2.getAs[Long]("live_rows") == n - 7)
     // a dir built before buildinfo existed reports NULL, not a lie
     val (fs, bi) = {
-      val p = new org.apache.hadoop.fs.Path(s"$lshDir/buildinfo.parquet")
+      val p = new org.apache.hadoop.fs.Path(s"${live(lshDir)}/buildinfo.parquet")
       (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
     }
     fs.delete(bi, true)
@@ -567,193 +569,81 @@ class IndexLifecycleSpec extends SparkSpec {
   }
 
   test("swap crash recovery: an interrupted tombstone swap never resurrects removed ids") {
-    // the window swapInParquet cannot close alone: between
-    // rename(live -> __old) and rename(__compact -> live) the LIVE path
-    // is missing, and for deletes.parquet "missing" reads as "no
-    // tombstones". recoverSwap (called by every reader) must restore the
-    // COMPLETE new set when its _SUCCESS landed, else the old set —
-    // either way, never neither.
+    // a tombstone replace is a new generation of the nested
+    // deletes.parquet root plus one commit: a crash before the commit
+    // leaves an orphan generation — complete or torn — that no reader
+    // resolves, so the committed set keeps serving; the next flip
+    // reclaims the orphans
     val corpus = emb.localCheckpoint(true)
     val query = corpus.filter($"vec_id" === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_swaprec").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft_swaprec").toString + "/idx"
     Similarity.buildLshIndex(corpus, "vec_id", "embedding", dir)
     IndexLifecycle.removeIds(spark, dir, Seq(3L).toDF("vec_id"), "vec_id")
     def served: Set[Long] = pairs(Similarity.probeLshIndex(spark, dir,
       "vec_id", "embedding", query, "embedding", k = 500)).map(_._1).toSet
     assert(!served.contains(3L), "fixture: tombstone not serving")
-    val del = s"$dir/deletes.parquet"
-    val fs = new org.apache.hadoop.fs.Path(del)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    val del = s"${live(dir)}/deletes.parquet"
 
-    // crash state A: live renamed away, no __compact (swap died first) —
-    // recovery must roll BACK to the old set
-    assert(fs.rename(p(del), p(s"$del.__old")))
-    assert(!served.contains(3L),
-      "crash state A (live missing, old present) resurrected a removed id")
-    assert(fs.exists(p(del)) && !fs.exists(p(s"$del.__old")),
-      "recovery did not restore the live path")
+    // crash state A: a COMPLETE replacement set that would un-delete 3
+    // and delete 4, never committed
+    Seq(4L).toDF("vec_id").write.parquet(s"$del/gen-crashed00001")
+    // crash state B: a TORN replacement set (the write itself died)
+    new java.io.File(s"$del/gen-torn0000002").mkdirs()
+    new java.io.File(s"$del/gen-torn0000002/part-torn.parquet").createNewFile()
+    val afterCrash = served
+    assert(!afterCrash.contains(3L),
+      "an uncommitted tombstone generation resurrected a removed id")
+    assert(afterCrash.contains(4L), "an uncommitted tombstone generation was served")
 
-    // crash state B: a COMPLETE new set in __compact (its _SUCCESS
-    // landed) and live renamed away — recovery must promote the NEW set
-    Seq(3L, 4L).toDF("vec_id")
-      .write.mode("overwrite").parquet(s"$del.__compact")
-    assert(fs.exists(p(s"$del.__compact/_SUCCESS")), "fixture: no _SUCCESS")
-    assert(fs.rename(p(del), p(s"$del.__old")))
-    val afterB = served
-    assert(!afterB.contains(3L) && !afterB.contains(4L),
-      "crash state B did not promote the complete new tombstone set")
-    assert(fs.exists(p(del)) && !fs.exists(p(s"$del.__compact")) &&
-      !fs.exists(p(s"$del.__old")), "recovery left swap debris")
-
-    // crash state C: an INCOMPLETE __compact (no _SUCCESS — the write
-    // itself died) and live renamed away — recovery must fall back to
-    // the old set and drop the torn write
-    fs.mkdirs(p(s"$del.__compact"))
-    fs.create(p(s"$del.__compact/part-torn.parquet"), true).close()
-    assert(fs.rename(p(del), p(s"$del.__old")))
-    val afterC = served
-    assert(!afterC.contains(3L) && !afterC.contains(4L),
-      s"crash state C lost the old tombstone set: served 3/4 again")
-    assert(fs.exists(p(del)) && !fs.exists(p(s"$del.__compact")),
-      "torn write survived recovery (a _SUCCESS-less dir must never be promoted)")
-
-    // crash state D: an APPEND arriving while postings.parquet sits
-    // mid-swap — mode("append") would otherwise CREATE a fresh postings
-    // file holding only the batch and strand the whole pre-crash corpus
-    // in the sibling dir forever; the append must recover first
-    val postings = s"$dir/postings.parquet"
-    assert(fs.rename(p(postings), p(s"$postings.__old")))
-    val batch = corpus.filter($"vec_id" === 1)
-      .select($"vec_id" + 900000L as "vec_id", $"embedding")
-      .localCheckpoint(true)
-    Similarity.appendLshIndex(batch, "vec_id", "embedding", dir)
-    val afterD = served
-    assert(afterD.contains(900001L), "appended id not served")
-    assert(afterD.size > 100,
-      s"append onto a mid-swap postings path stranded the corpus: " +
-        s"only ${afterD.size} ids served")
-  }
-
-  test("compaction clears tombstone swap SIBLINGS too — a crash-leftover __compact never resurrects a cleared backlog (ADVICE r16)") {
-    // the hazard: an interrupted undeleteTombstones swap leaves a
-    // COMPLETE deletes.parquet.__compact beside a still-live file;
-    // recoverSwap no-ops while live exists, so the sibling lingers.
-    // A compaction that deletes only the LIVE file then hands the next
-    // reader's recovery that stale sibling to promote — the backlog the
-    // compaction just applied physically comes back as tombstones over
-    // ids that were never re-removed (and ids re-appended later would
-    // silently vanish from every probe). Both arms must clear via
-    // clearTombstones (siblings first), not a bare delete.
-    val corpus = emb.localCheckpoint(true)
-    val query = corpus.filter($"vec_id" === 0)
-    def plantSibling(dir: String, ids: Seq[Long]): Unit = {
-      ids.toDF("vec_id").write.mode("overwrite")
-        .parquet(s"$dir/deletes.parquet.__compact")
-      new java.io.File(
-        s"$dir/deletes.parquet.__compact/${IndexLifecycle.SwapOkMarker}")
-        .createNewFile()
-    }
-    def noDebris(dir: String): Unit =
-      Seq("deletes.parquet", "deletes.parquet.__compact",
-          "deletes.parquet.__old").foreach(n =>
-        assert(!new java.io.File(s"$dir/$n").exists(),
-          s"compaction left $n behind — the next reader's recovery " +
-            "would resurrect the cleared backlog from it"))
-
-    // LSH arm
-    val lshDir = java.nio.file.Files.createTempDirectory("graft_comp_sib").toString
-    Similarity.buildLshIndex(corpus, "vec_id", "embedding", lshDir)
-    IndexLifecycle.removeIds(spark, lshDir, Seq(3L).toDF("vec_id"), "vec_id")
-    plantSibling(lshDir, Seq(5L))
-    IndexLifecycle.compactIndex(spark, lshDir)
-    noDebris(lshDir)
-    assert(IndexLifecycle.loadTombstones(spark, lshDir).isEmpty,
-      "a reader after compaction still sees a tombstone backlog")
-    val lshServed = pairs(Similarity.probeLshIndex(spark, lshDir,
-      "vec_id", "embedding", query, "embedding", k = 500)).map(_._1).toSet
-    assert(!lshServed.contains(3L), "compaction did not apply the real backlog")
-    assert(lshServed.contains(5L),
-      "the planted stale sibling's id is being filtered — the crash " +
-        "leftover was promoted after the clear")
-
-    // cell arm (tombstoned removeIds)
-    val ivfDir = java.nio.file.Files.createTempDirectory("graft_comp_sib_ivf")
-      .toString + "/idx"
-    Ivf.buildIndex(corpus, "vec_id", "embedding", ivfDir, maxIter = 5)
-    IndexLifecycle.removeIds(spark, ivfDir, Seq(3L).toDF("vec_id"), "vec_id",
-      tombstone = true)
-    plantSibling(ivfDir, Seq(5L))
-    IndexLifecycle.compactIndex(spark, ivfDir)
-    noDebris(ivfDir)
-    assert(IndexLifecycle.loadTombstones(spark, ivfDir).isEmpty)
-    val ivfServed = pairs(Ivf.probeIndex(spark, ivfDir, "vec_id", "embedding",
-      query, "embedding", k = 500)).map(_._1).toSet
-    assert(!ivfServed.contains(3L) && ivfServed.contains(5L),
-      s"cell-arm compaction mishandled the backlog/sibling: 3 in=" +
-        s"${ivfServed.contains(3L)}, 5 in=${ivfServed.contains(5L)}")
+    // the next tombstone flip lands and reclaims both orphans
+    IndexLifecycle.removeIds(spark, dir, Seq(4L).toDF("vec_id"), "vec_id")
+    val after = served
+    assert(!after.contains(3L) && !after.contains(4L), "the flip lost a removal")
+    val gens = new java.io.File(del).listFiles().map(_.getName).filter(_.startsWith("gen-"))
+    assert(gens.length == 1 && !gens.exists(n => n.contains("crashed") || n.contains("torn")),
+      s"the flip GC left orphan tombstone generations: ${gens.mkString(",")}")
   }
 
   test("whole-dir rebuild crash recovery: readers self-heal, torn rebuilds never serve") {
-    // the dir-level analog of the tombstone-swap recovery: rebuildIndex's
-    // two-rename window leaves the LIVE dir missing; the next reader must
-    // promote a COMPLETE __rebuild (its _GRAFT_BUILD_OK landed) or roll
-    // back to __old — never throw until manual repair, never serve torn
+    // a rebuild writes a fresh generation and publishes it with ONE
+    // commit: a crash before the commit leaves an orphan generation —
+    // complete or torn — that readers never resolve (no repair step
+    // exists), and the next flip reclaims it
     val corpus = emb.localCheckpoint(true)
     val query = corpus.filter($"vec_id" === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_dirrec").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft_dirrec").toString + "/idx"
     Ivf.buildIndex(corpus, "vec_id", "embedding", dir, maxIter = 5)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    def topIds: Seq[Long] = pairs(Ivf.probeIndex(spark, dir, "vec_id",
-      "embedding", query, "embedding", k = 10)).map(_._1)
+    def topIds(k: Int): Seq[Long] = pairs(Ivf.probeIndex(spark, dir, "vec_id",
+      "embedding", query, "embedding", k = k)).map(_._1)
+    val before = topIds(10)
 
-    // state A: live renamed away, no __rebuild — roll back to the old dir
-    val before = topIds
-    assert(fs.rename(p(dir), p(s"$dir.__old")))
-    assert(topIds == before,
-      "crash state A (live missing, old present) did not roll back")
-    assert(fs.exists(p(dir)) && !fs.exists(p(s"$dir.__old")))
+    // state A: a COMPLETE rebuild (on the corpus minus id 5, so serving
+    // it would be observable) that crashed before its commit
+    Ivf.writeIndex(corpus.filter($"vec_id" =!= 5), "vec_id", "embedding",
+      s"$dir/gen-crashedrebuild", nprobe = 4, seed = 42L, sampleFraction = 1.0,
+      maxIter = 5, hierarchicalThreshold = Dedup.HierarchicalCellsThreshold)
+    assert(topIds(10) == before, "an uncommitted rebuild generation was served")
+    assert(topIds(600).contains(5L), "an uncommitted rebuild generation was served")
 
-    // state B: a COMPLETE rebuild in __rebuild (marker present, built on
-    // the corpus minus id 5 so promotion is observable) — promote it
-    Ivf.buildIndex(corpus.filter($"vec_id" =!= 5), "vec_id", "embedding",
-      s"$dir.__rebuild", maxIter = 5)
-    fs.create(p(s"$dir.__rebuild/${IndexLifecycle.RebuildOkMarker}"), true).close()
-    assert(fs.rename(p(dir), p(s"$dir.__old")))
-    val afterB = pairs(Ivf.probeIndex(spark, dir, "vec_id", "embedding",
-      query, "embedding", k = 600)).map(_._1)
-    assert(!afterB.contains(5L),
-      "crash state B did not promote the complete rebuild")
-    assert(fs.exists(p(dir)) && !fs.exists(p(s"$dir.__rebuild")) &&
-      !fs.exists(p(s"$dir.__old")), "dir recovery left swap debris")
+    // state B: a TORN rebuild generation
+    new java.io.File(s"$dir/gen-tornrebuild/invfile.parquet").mkdirs()
+    assert(topIds(10) == before, "a torn rebuild generation was served")
 
-    // state C: a TORN __rebuild (no marker) — roll back to the old dir,
-    // drop the torn artifacts
-    fs.mkdirs(p(s"$dir.__rebuild/invfile.parquet"))
-    assert(fs.rename(p(dir), p(s"$dir.__old")))
-    val afterC = topIds
-    assert(afterC == pairs(Ivf.probeIndex(spark, dir, "vec_id", "embedding",
-      query, "embedding", k = 10)).map(_._1) && afterC.nonEmpty,
-      "crash state C did not restore a servable index")
-    assert(!fs.exists(p(s"$dir.__rebuild")),
-      "torn rebuild survived recovery (a marker-less dir must never be promoted)")
-
-    // a normal rebuild still round-trips and leaves the marker in the
-    // promoted dir (harmless, and the witness the dir completed)
+    // a normal rebuild flips and reclaims both orphans
     IndexLifecycle.rebuildIndex(spark, dir, maxIter = Some(5))
-    assert(fs.exists(p(s"$dir/${IndexLifecycle.RebuildOkMarker}")))
-    assert(topIds.nonEmpty)
+    val gens = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("gen-"))
+    assert(gens.length == 1 && !gens.exists(n => n.contains("crashed") || n.contains("torn")),
+      s"the rebuild flip left orphan generations: ${gens.mkString(",")}")
+    assert(topIds(10).nonEmpty)
   }
 
   test("rebuildIndex defaults to the PERSISTED build parameters (ADVICE r14)") {
     val corpus = emb.localCheckpoint(true)
     val n = corpus.count()
     def level1Cells(dir: String): Long =
-      spark.read.parquet(s"$dir/centroids.parquet")
+      spark.read.parquet(s"${live(dir)}/centroids.parquet")
         .filter($"level" === 1).count()
-    def info(dir: String) = spark.read.parquet(s"$dir/buildinfo.parquet").head()
+    def info(dir: String) = spark.read.parquet(s"${live(dir)}/buildinfo.parquet").head()
 
     // IVF: non-default nprobe/seed/maxIter persist and survive a
     // default-args rebuild — cells re-size under the ORIGINAL nprobe
@@ -784,7 +674,7 @@ class IndexLifecycleSpec extends SparkSpec {
     Similarity.buildLshIndex(corpus, "vec_id", "embedding", lshDir,
       baseTables = 12)
     IndexLifecycle.rebuildIndex(spark, lshDir)
-    val meta = spark.read.parquet(s"$lshDir/meta.parquet").head()
+    val meta = spark.read.parquet(s"${live(lshDir)}/meta.parquet").head()
     assert(meta.getAs[Int]("tables") ==
       Similarity.probeTablesFor(meta.getAs[Int]("planes"), 12),
       s"rebuild re-sized tables under the default baseTables: $meta")
@@ -801,7 +691,7 @@ class IndexLifecycleSpec extends SparkSpec {
     // the zero vector — so it can land below the clamp; the pin is the
     // bound, not the exact count)
     def trainedCb(dir: String): Long =
-      spark.read.parquet(s"$dir/books.parquet")
+      spark.read.parquet(s"${live(dir)}/books.parquet")
         .agg(countDistinct($"c")).head().getLong(0)
     val cbTiny = trainedCb(pqDir)
     assert(cbTiny <= 20L, "clamp did not bind — respec the fixture")
@@ -824,12 +714,12 @@ class IndexLifecycleSpec extends SparkSpec {
     val before = pairs(Ivf.probeIndex(spark, dir, "vec_id", "embedding",
       query, "embedding", k = 10))
     val removed = before.take(3).map(_._1)
-    val filesBefore = spark.read.parquet(s"$dir/invfile.parquet").inputFiles.sorted
+    val filesBefore = spark.read.parquet(s"${live(dir)}/invfile.parquet").inputFiles.sorted
     IndexLifecycle.removeIds(spark, dir, removed.toDF("vec_id"), "vec_id",
       tombstone = true)
     // the scattered-batch point: NO cell directory was rewritten — the
-    // write cost is O(batch), flat in how many cells the batch touches
-    assert(spark.read.parquet(s"$dir/invfile.parquet").inputFiles.sorted
+    // write cost is the backlog's, flat in how many cells the batch touches
+    assert(spark.read.parquet(s"${live(dir)}/invfile.parquet").inputFiles.sorted
         .sameElements(filesBefore),
       "tombstoned remove rewrote cell files — that is the physical path's job")
     // single probe, batch probe (via cellSource — the streaming probe's
@@ -857,7 +747,7 @@ class IndexLifecycleSpec extends SparkSpec {
         .head().getSeq[Double](0).toArray
       val probedCells = model.probedCells(q0, nprobe = 2)
       val pruned = IndexLifecycle.minusTombstones(spark, dir,
-          spark.read.parquet(s"$dir/invfile.parquet"), "vec_id")
+          spark.read.parquet(s"${live(dir)}/invfile.parquet"), "vec_id")
         .filter(col("cell").isin(probedCells.map(Integer.valueOf): _*))
       // collect(), not count(): count builds its OWN QueryExecution and
       // the inspected plan's numFiles would stay 0 (vacuous; review r16)
@@ -874,7 +764,7 @@ class IndexLifecycleSpec extends SparkSpec {
       val scans = fileScans(pruned.queryExecution.executedPlan)
       assert(scans.length == 1 && scans.head.partitionFilters.nonEmpty,
         s"cell filter did not reach PartitionFilters under the tombstone anti-join")
-      val allFiles = spark.read.parquet(s"$dir/invfile.parquet").inputFiles.length
+      val allFiles = spark.read.parquet(s"${live(dir)}/invfile.parquet").inputFiles.length
       val filesRead = scans.head.metrics("numFiles").value
       assert(filesRead > 0, "numFiles never materialized — the pin is vacuous")
       assert(filesRead < allFiles,
@@ -892,9 +782,9 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(IndexLifecycle.maintainIndex(spark, dir,
       minTombstoneBacklog = 1L, tombstoneFraction = 0.0) == "compact")
     // compaction applied the batch physically and cleared the backlog
-    assert(!new java.io.File(s"$dir/deletes.parquet").exists(),
+    assert(!new java.io.File(s"${live(dir)}/deletes.parquet").exists(),
       "compaction did not clear the tombstone set")
-    assert(spark.read.parquet(s"$dir/invfile.parquet")
+    assert(spark.read.parquet(s"${live(dir)}/invfile.parquet")
         .filter($"vec_id".isin(removed: _*)).count() == 0,
       "compaction did not apply tombstones physically")
     assert(pairs(Ivf.probeIndex(spark, dir, "vec_id", "embedding",
@@ -931,14 +821,14 @@ class IndexLifecycleSpec extends SparkSpec {
     // rebuild applies the remaining backlog physically (reads through
     // the tombstone filter) and the fresh dir carries none
     IndexLifecycle.rebuildIndex(spark, dir)
-    assert(!new java.io.File(s"$dir/deletes.parquet").exists())
-    assert(spark.read.parquet(s"$dir/codes.parquet")
+    assert(!new java.io.File(s"${live(dir)}/deletes.parquet").exists())
+    assert(spark.read.parquet(s"${live(dir)}/codes.parquet")
         .filter($"vec_id" === removed(1)).count() == 0,
       "rebuild resurrected a tombstoned id")
     // note: the re-appended id now exists physically TWICE in the
     // corpus history (original + append) — buildPqIndex trains on the
     // live rows, so it must appear exactly once post-rebuild
-    assert(spark.read.parquet(s"$dir/codes.parquet")
+    assert(spark.read.parquet(s"${live(dir)}/codes.parquet")
         .filter($"vec_id" === removed.head).count() >= 1)
   }
 
@@ -1090,7 +980,7 @@ class IndexLifecycleSpec extends SparkSpec {
     }
     assert(stagnant == 3, s"stagnant failures must charge the budget: $stagnant")
     // PROGRESSING: every failure lands a NEW file first (a maintenance
-    // verb's next rename, as the probe would observe it) — a 2-attempt
+    // verb's next write, as the probe would observe it) — a 2-attempt
     // budget survives 6 failures because each one shows epoch progress
     var racing = 0
     val out = IndexLifecycle.retryOnStaleFiles(dir, attempts = 2) {
@@ -1099,7 +989,7 @@ class IndexLifecycleSpec extends SparkSpec {
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$dir/mutation_$racing"),
           "m".getBytes("UTF-8"))
-        throw new IndexLifecycle.WorldChangedException(s"racing rename $racing")
+        throw new IndexLifecycle.WorldChangedException(s"racing write $racing")
       }
       42
     }

@@ -4,14 +4,12 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** The single-writer lease for the index lifecycle verbs (r15 verdict
-  * #1): the crash-safe rename protocols promise either-old-or-new
-  * against a CRASH, not against a concurrent second WRITER — two verbs
-  * interleaving on one dir (append-during-rebuild, remove-during-
+  * #1): the generation protocol promises either-old-or-new against a
+  * CRASH, not against a concurrent second WRITER — two verbs
+  * interleaving on one root (append-during-rebuild, remove-during-
   * compact) must serialize through the lease or fail loudly, never
-  * corrupt. Plus the r15 ADVICE items the lease anchors: graft-owned
-  * swap-completeness markers (no `_SUCCESS` dependence) and
-  * race-tolerant recovery (two readers healing the same torn state
-  * must not fail each other). */
+  * corrupt; and a holder taken over mid-verb must not land its writes
+  * (the fencing token). */
 class IndexLockSpec extends SparkSpec {
   import spark.implicits._
 
@@ -37,8 +35,8 @@ class IndexLockSpec extends SparkSpec {
       query, "embedding", k = 10))
     val lock = holdLock(dir, "rebuildIndex")
     // append-during-rebuild: the exact interleaving the verdict names —
-    // an append's mode("append") landing between a rebuild's two renames
-    // goes to a freshly-promoted dir or is lost with __old
+    // an append landing in the generation a rebuild is about to
+    // supersede is lost with it
     val batch = corpus.limit(3)
       .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding")
     def heldError(body: => Any): Unit = {
@@ -245,68 +243,20 @@ class IndexLockSpec extends SparkSpec {
     IndexLifecycle.withIndexLock(spark, dir, "after", leaseMs = 300L) { () }
   }
 
-  test("zombie swap is fenced: a taken-over holder's protocol-critical rename aborts loudly") {
-    // shrinking the zombie-WRITE window: release fencing alone still
-    // lets a resumed zombie land its swap renames over the new holder's
-    // artifacts — requireLeaseStillHeld re-verifies the token
-    // immediately before swapInParquet's first rename, so the zombie
-    // aborts with the old set intact instead of racing the live writer.
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_lock_fence").toString + "/idx"
-    new java.io.File(dir).mkdirs()
-    val live = s"$dir/deletes.parquet"
-    Seq(1L, 2L).toDF("vec_id").write.parquet(live)
-    val aEntered = new java.util.concurrent.CountDownLatch(1)
-    val aProceed = new java.util.concurrent.CountDownLatch(1)
-    val aOutcome = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val zombie = new Thread(() =>
-      IndexLifecycle.withIndexLock(spark, dir, "zombie-swap", leaseMs = 300L,
-        heartbeat = false) {
-        aEntered.countDown()
-        aProceed.await(30, java.util.concurrent.TimeUnit.SECONDS)
-        // taken over by now: the swap must fail the fence, not rename
-        try IndexLifecycle.swapInParquet(spark, live)(Seq(9L).toDF("vec_id"))
-        catch { case t: Throwable => aOutcome.add(t) }
-      })
-    zombie.start()
-    assert(aEntered.await(30, java.util.concurrent.TimeUnit.SECONDS))
-    Thread.sleep(400)
-    val bRelease = new java.util.concurrent.CountDownLatch(1)
-    val bEntered = new java.util.concurrent.CountDownLatch(1)
-    val usurper = new Thread(() =>
-      IndexLifecycle.withIndexLock(spark, dir, "usurper", leaseMs = 300L) {
-        bEntered.countDown()
-        bRelease.await(30, java.util.concurrent.TimeUnit.SECONDS)
-      })
-    usurper.start()
-    assert(bEntered.await(30, java.util.concurrent.TimeUnit.SECONDS))
-    aProceed.countDown()
-    zombie.join(30000)
-    bRelease.countDown()
-    usurper.join(30000)
-    val t = aOutcome.peek()
-    assert(t != null, "zombie's swap went through under a lost lease")
-    assert(t.isInstanceOf[IllegalStateException] &&
-      t.getMessage.contains("lost before [artifact swap rename]"),
-      s"wrong failure: $t")
-    // the live artifact is untouched — the fence fired before any rename
-    assert(spark.read.parquet(live).as[Long].collect().sorted.toSeq == Seq(1L, 2L))
-  }
-
   test("zombie tombstone clear is fenced: a taken-over compaction cannot drop the new holder's backlog") {
-    // the empty-rewrite arm of compactIndexInner mutates EXACTLY ONCE —
-    // clearTombstones — so without its own fence a zombie compaction
-    // (stalled past takeover, resumed) would delete a backlog the new
-    // holder appended meanwhile, silently resurrecting removed ids in
-    // every probe. Fixture: a one-cell layout whose deletes.parquet
-    // holds only a GHOST id (affected cells empty => no overwrite fence
-    // runs; the clear fence is the verb's only guard).
-    import spark.implicits._
+    // the nothing-to-rewrite arm of compactIndexInner mutates EXACTLY
+    // ONCE — the in-place drop of a tombstone root that filters nothing
+    // — so without its own fence a zombie compaction (stalled past
+    // takeover, resumed) would delete a backlog the new holder appended
+    // meanwhile, silently resurrecting removed ids in every probe.
+    // Fixture: a backlog holding only a GHOST id (no cell is affected,
+    // so no generation is written; the drop fence is the verb's only
+    // guard).
     val dir = java.nio.file.Files.createTempDirectory("graft_lock_clear").toString + "/idx"
-    new java.io.File(dir).mkdirs()
-    Seq((1L, Seq(0.1f, 0.2f), 0)).toDF("vec_id", "embedding", "cell")
-      .write.partitionBy("cell").parquet(s"$dir/invfile.parquet")
-    Seq(999L).toDF("vec_id").write.parquet(s"$dir/deletes.parquet")
+    Ivf.buildIndex(emb.limit(20).localCheckpoint(true), "vec_id", "embedding", dir,
+      maxIter = 2)
+    IndexLifecycle.removeIds(spark, dir, Seq(999L).toDF("vec_id"), "vec_id",
+      tombstone = true)
     val aEntered = new java.util.concurrent.CountDownLatch(1)
     val aProceed = new java.util.concurrent.CountDownLatch(1)
     val aOutcome = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -315,7 +265,8 @@ class IndexLockSpec extends SparkSpec {
         heartbeat = false) {
         aEntered.countDown()
         aProceed.await(30, java.util.concurrent.TimeUnit.SECONDS)
-        try IndexLifecycle.compactIndexInner(spark, dir, maxFilesPerCell = 4)
+        try IndexLifecycle.compactIndexInner(spark, dir, maxFilesPerCell = 4,
+          idBroadcastLimit = Dedup.HotShingleBroadcastLimit)
         catch { case t: Throwable => aOutcome.add(t) }
       })
     zombie.start()
@@ -337,10 +288,11 @@ class IndexLockSpec extends SparkSpec {
     val t = aOutcome.peek()
     assert(t != null, "zombie's tombstone clear went through under a lost lease")
     assert(t.isInstanceOf[IllegalStateException] &&
-      t.getMessage.contains("lost before [tombstone clear (compaction)]"),
+      t.getMessage.contains("lost before [tombstone-root drop (compaction)]"),
       s"wrong failure: $t")
     // the backlog survived — the live holder's tombstones are intact
-    assert(spark.read.parquet(s"$dir/deletes.parquet").as[Long].collect().toSeq == Seq(999L),
+    assert(IndexLifecycle.loadTombstones(spark, IndexLifecycle.resolveIndexDir(spark, dir))
+      .map(_.as[Long].collect().toSeq).contains(Seq(999L)),
       "zombie cleared the backlog despite the lost lease")
   }
 
@@ -484,55 +436,5 @@ class IndexLockSpec extends SparkSpec {
           "demonstrates that the guarantee comes from the store's precondition")
       new java.io.File(IndexLifecycle.lockPath(dirB)).delete()
     } finally IndexLifecycle.lockIo = prev
-  }
-
-  test("swap completeness is graft-owned: recovery promotes a torn swap with no _SUCCESS (ADVICE r15)") {
-    // a deployment that disables mapreduce.fileoutputcommitter
-    // .marksuccessfuljobs writes no _SUCCESS; keying recovery on it
-    // would roll EVERY interrupted swap back to the old set (never
-    // corrupt, silently always-old). The graft marker closes that.
-    val dir = java.nio.file.Files.createTempDirectory("graft_swap_marker").toString
-    val live = s"$dir/deletes.parquet"
-    Seq(1L, 2L).toDF("vec_id").write.parquet(s"$live.__compact")
-    Seq(9L).toDF("vec_id").write.parquet(s"$live.__old")
-    // simulate the disabled committer: drop _SUCCESS, keep the graft marker
-    assert(new java.io.File(s"$live.__compact/_SUCCESS").delete())
-    new java.io.File(s"$live.__compact/${IndexLifecycle.SwapOkMarker}")
-      .createNewFile()
-    IndexLifecycle.recoverSwap(spark, live)
-    val got = spark.read.parquet(live).as[Long].collect().sorted.toSeq
-    assert(got == Seq(1L, 2L), s"recovery did not promote the complete new set: $got")
-    assert(!new java.io.File(s"$live.__old").exists())
-    // legacy pre-marker torn state (only _SUCCESS) still promotes
-    val live2 = s"$dir/legacy.parquet"
-    Seq(3L).toDF("vec_id").write.parquet(s"$live2.__compact")
-    assert(new java.io.File(s"$live2.__compact/_SUCCESS").exists())
-    IndexLifecycle.recoverSwap(spark, live2)
-    assert(spark.read.parquet(live2).as[Long].collect().toSeq == Seq(3L))
-    // and swapInParquet itself writes the marker on every fresh swap
-    val live3 = s"$dir/fresh.parquet"
-    Seq(4L).toDF("vec_id").write.parquet(live3)
-    graft.ops.IndexLifecycle.swapInParquet(spark, live3)(Seq(5L).toDF("vec_id"))
-    assert(new java.io.File(s"$live3/${IndexLifecycle.SwapOkMarker}").exists(),
-      "swapInParquet no longer publishes its own completeness marker")
-  }
-
-  test("two readers healing the same torn state concurrently both succeed (race-tolerant recovery)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_recover_race").toString
-    val live = s"$dir/deletes.parquet"
-    Seq(1L, 2L, 3L).toDF("vec_id").write.parquet(s"$live.__compact")
-    new java.io.File(s"$live.__compact/${IndexLifecycle.SwapOkMarker}")
-      .createNewFile()
-    val start = new java.util.concurrent.CyclicBarrier(2)
-    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val readers = (1 to 2).map(_ => new Thread(() =>
-      try { start.await(); IndexLifecycle.recoverSwap(spark, live) }
-      catch { case t: Throwable => errors.add(t) }))
-    readers.foreach(_.start()); readers.foreach(_.join(30000))
-    assert(errors.isEmpty,
-      s"concurrent recovery failed spuriously: ${errors.peek()}")
-    assert(spark.read.parquet(live).as[Long].collect().sorted.toSeq ==
-      Seq(1L, 2L, 3L))
-    assert(!new java.io.File(s"$live.__compact").exists())
   }
 }

@@ -442,7 +442,7 @@ class IvfSpec extends SparkSpec {
     }
     assert(errPq.getMessage.contains("appendPqIndex"),
       s"wrong guidance: ${errPq.getMessage}")
-    assert(!new java.io.File(s"$pqDir/invfile.parquet").exists(),
+    assert(!new java.io.File(s"${IndexLifecycle.resolveIndexDir(spark, pqDir)}/invfile.parquet").exists(),
       "guard fired but the split invfile was still created")
     val ivfDir = java.nio.file.Files.createTempDirectory("graft_ivf_guard").toString
     Ivf.buildIndex(emb, "vec_id", "embedding", ivfDir, maxIter = 5)
@@ -467,7 +467,7 @@ class IvfSpec extends SparkSpec {
       .select(col("embedding").cast("array<double>"))
       .head().getSeq[Double](0).toArray
     val probedCells = model.probedCells(q, nprobe = 2)
-    val inv = spark.read.parquet(s"$dir/invfile.parquet")
+    val inv = spark.read.parquet(s"${IndexLifecycle.resolveIndexDir(spark, dir)}/invfile.parquet")
     val probed = inv.filter(col("cell").isin(probedCells.map(Integer.valueOf): _*))
     val plan = probed.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters:") && plan.contains("cell"),
@@ -478,9 +478,9 @@ class IvfSpec extends SparkSpec {
     probed.collect()
     val filesRead = probed.queryExecution.executedPlan
       .collectLeaves().head.metrics("numFiles").value
-    val allFiles = spark.read.parquet(s"$dir/invfile.parquet").inputFiles.length
+    val allFiles = spark.read.parquet(s"${IndexLifecycle.resolveIndexDir(spark, dir)}/invfile.parquet").inputFiles.length
     assert(filesRead > 0, "numFiles never materialized — the pin is vacuous")
-    val cellDirs = new java.io.File(s"$dir/invfile.parquet").listFiles()
+    val cellDirs = new java.io.File(s"${IndexLifecycle.resolveIndexDir(spark, dir)}/invfile.parquet").listFiles()
       .count(_.getName.startsWith("cell="))
     assert(cellDirs > probedCells.length, s"only $cellDirs cell dirs — partitioning missing")
     assert(filesRead < allFiles,

@@ -1,104 +1,18 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
-/** Negative control for the swap protocols' ATOMIC-RENAME assumption
-  * (r18 verdict #5 — the [[IndexLifecycle.LockIo]] treatment applied to
-  * the other filesystem primitive the protocols trust).
-  *
-  * Both swap protocols ([[IndexLifecycle.swapInParquet]] file-level,
-  * [[IndexLifecycle.rebuildIndex]] whole-dir) promise "either the old
-  * or the new set, never neither, never a mix" — a promise that stands
-  * on `rename` being an atomic metadata move (HDFS NameNode, POSIX
-  * rename(2)). Stock object-store connectors implement rename as
-  * COPY-then-DELETE. This suite substitutes exactly that fake and shows
-  * which torn states the reader-side healing ([[IndexLifecycle
-  * .recoverSwap]]) genuinely covers and which states BREAK the promise —
-  * the matrix documented on [[IndexLifecycle.RenameIo]]:
-  *
-  *  - crash mid-COPY of the live→old rename: live never touched —
-  *    readers heal to exactly the old world, the retried swap wins. SAFE.
-  *  - crash between copy and delete (both dirs visible): live intact —
-  *    same. SAFE.
-  *  - crash mid-DELETE of the live source: live EXISTS but is PARTIAL —
-  *    recoverSwap keys on live-missing, sees a "healthy" path, and
-  *    readers serve silently partial data. BROKEN — and invisible.
-  *  - crash mid-COPY of the tmp→live rename: live exists holding HALF
-  *    the new set. Same silent partial serve, now of the NEW world.
-  *    BROKEN.
-  *
-  * The broken rows are the point: they are the demonstrated reason the
-  * scaladoc matrix says "on copy+delete stores, do not run the in-place
-  * verbs against the store — mount a rename-atomic layer or flip a
-  * pointer via a conditional write instead". */
+/** The index protocol on stores whose rename is COPY-then-DELETE (the
+  * stock S3A/GCS/ABFS connectors): a rename torn mid-copy there serves a
+  * silently PARTIAL world, so the protocol renames nothing — every
+  * replace writes a complete new generation and flips a commit pointer
+  * with one conditional create (ConventionsSpec pins the absence of
+  * renames). What remains is the flip's one crash window, between the
+  * generation write and the commit, pinned here. */
 class NonAtomicRenameSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Stock-object-store rename: copy children one-by-one, then delete
-    * the source — with a tear injected at the chosen phase of the
-    * chosen rename (matched on the destination's staging suffix).
-    * Scoped to THIS spec's fixture dirs (ADVICE r19): the hook is
-    * process-wide, so renames under any other path — another suite's
-    * artifacts, if suite-level parallelism is ever enabled — delegate
-    * to the real [[IndexLifecycle.HadoopRenameIo]] untouched. */
-  private final class CopyDeleteRenameIo(
-      tearPhase: String, // "mid-copy" | "mid-delete" | "before-delete" | "none"
-      tearWhenDst: org.apache.hadoop.fs.Path => Boolean,
-      fixtureDir: String)
-    extends IndexLifecycle.RenameIo {
-    /** fixture-scoped rename invocations — pointer mode pins this at 0 */
-    @volatile var invoked: Int = 0
-    def rename(fs: org.apache.hadoop.fs.FileSystem,
-               src: org.apache.hadoop.fs.Path,
-               dst: org.apache.hadoop.fs.Path): Boolean = {
-      if (!src.toUri.getPath.startsWith(fixtureDir))
-        return IndexLifecycle.HadoopRenameIo.rename(fs, src, dst)
-      invoked += 1
-      val conf = spark.sparkContext.hadoopConfiguration
-      val children = fs.listStatus(src).sortBy(_.getPath.getName)
-      def copyN(n: Int): Unit = {
-        fs.mkdirs(dst)
-        children.take(n).foreach { st =>
-          org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-            new org.apache.hadoop.fs.Path(dst, st.getPath.getName),
-            false, conf)
-        }
-      }
-      val tear = tearWhenDst(dst)
-      if (tear && tearPhase == "mid-copy") {
-        copyN(children.length / 2)
-        throw new java.io.IOException("simulated crash mid-copy (copy+delete rename)")
-      } else if (tear && tearPhase == "mid-delete") {
-        copyN(children.length)
-        children.take(math.max(1, children.length / 2))
-          .foreach(st => fs.delete(st.getPath, true))
-        throw new java.io.IOException("simulated crash mid-delete (copy+delete rename)")
-      } else if (tear && tearPhase == "before-delete") {
-        copyN(children.length)
-        throw new java.io.IOException("simulated crash between copy and delete")
-      } else {
-        copyN(children.length)
-        fs.delete(src, true)
-        true
-      }
-    }
-  }
-
-  private def isOld(p: org.apache.hadoop.fs.Path): Boolean =
-    p.getName.endsWith(".__old")
-  private def isLive(p: org.apache.hadoop.fs.Path): Boolean =
-    !p.getName.contains(".__")
-
-  /** A 4-file live artifact plus the fresh replacement, in a temp dir. */
-  private def fixture(): (String, org.apache.spark.sql.DataFrame) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nar").toString
-    val path = s"$dir/art.parquet"
-    spark.range(0, 100).toDF("id").repartition(4).write.parquet(path)
-    (path, spark.range(100, 200).toDF("id").repartition(4))
-  }
-
-  /** The same artifact as a POINTER-MODE root: generation + commit,
+  /** A 4-file artifact as a generation root: generation + commit,
     * nothing at the root but the marker/commit/generation entries. */
   private def pointerFixture(): (String, org.apache.spark.sql.DataFrame) = {
     val dir = java.nio.file.Files.createTempDirectory("graft_nar_ptr").toString
@@ -111,128 +25,15 @@ class NonAtomicRenameSpec extends SparkSpec {
 
   private def readPtrIds(path: String): Set[Long] = {
     val phys = IndexLifecycle.resolvePointer(spark, path)
-      .getOrElse(fail(s"pointer root $path has no committed generation"))
+      .getOrElse(fail(s"generation root $path has no committed generation"))
     spark.read.parquet(phys).as[Long].collect().toSet
-  }
-
-  private def withFake[T](io: IndexLifecycle.RenameIo)(body: => T): T = {
-    IndexLifecycle.renameIo = io
-    try body finally IndexLifecycle.renameIo = IndexLifecycle.HadoopRenameIo
-  }
-
-  private def readIds(path: String): Set[Long] = {
-    IndexLifecycle.recoverSwap(spark, path)
-    spark.read.parquet(path).as[Long].collect().toSet
-  }
-
-  test("tear mid-copy of live->old: readers heal to exactly the old world; the retried swap lands the new one") {
-    val (path, fresh) = fixture()
-    val boom = intercept[java.io.IOException] {
-      withFake(new CopyDeleteRenameIo("mid-copy", isOld,
-          new java.io.File(path).getParent)) {
-        IndexLifecycle.swapInParquet(spark, path)(fresh)
-      }
-    }
-    assert(boom.getMessage.contains("mid-copy"))
-    // live untouched: every reader sees the complete OLD world
-    assert(readIds(path) == (0L until 100L).toSet)
-    // and the swap is retryable with a working rename — lands the NEW world
-    IndexLifecycle.swapInParquet(spark, path)(fresh)
-    assert(readIds(path) == (100L until 200L).toSet)
-  }
-
-  test("crash between copy and delete (source+dest both visible): readers heal to exactly the old world") {
-    val (path, fresh) = fixture()
-    intercept[java.io.IOException] {
-      withFake(new CopyDeleteRenameIo("before-delete", isOld,
-          new java.io.File(path).getParent)) {
-        IndexLifecycle.swapInParquet(spark, path)(fresh)
-      }
-    }
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    // the torn state really is "both visible" — live AND a full __old copy
-    assert(fs.exists(new org.apache.hadoop.fs.Path(path)))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(path + ".__old")))
-    assert(readIds(path) == (0L until 100L).toSet)
-    IndexLifecycle.swapInParquet(spark, path)(fresh)
-    assert(readIds(path) == (100L until 200L).toSet)
-  }
-
-  test("NEGATIVE CONTROL: tear mid-delete of the live source serves a silently PARTIAL old world") {
-    val (path, fresh) = fixture()
-    intercept[java.io.IOException] {
-      withFake(new CopyDeleteRenameIo("mid-delete", isOld,
-          new java.io.File(path).getParent)) {
-        IndexLifecycle.swapInParquet(spark, path)(fresh)
-      }
-    }
-    // live EXISTS (so recoverSwap's live-missing trigger never fires)
-    // but is missing files — and the read neither fails nor heals: it
-    // returns a strict subset with no error. This is the silent
-    // wrong-answer mode that makes copy+delete stores unsafe for the
-    // in-place swap verbs — the contract, demonstrated by its absence
-    // (the NonAtomicLockIoSpec posture).
-    val served = readIds(path)
-    assert(served.nonEmpty, "torn live dir unexpectedly empty")
-    assert(served.subsetOf((0L until 100L).toSet))
-    assert(served.size < 100,
-      s"expected a PARTIAL old world, got all ${served.size} rows — the tear did nothing")
-  }
-
-  test("NEGATIVE CONTROL: tear mid-copy of tmp->live serves a silently partial NEW world") {
-    val (path, fresh) = fixture()
-    intercept[java.io.IOException] {
-      // first rename (live->old) completes as a faithful copy+delete;
-      // the second (tmp->live) tears halfway through its copy
-      withFake(new CopyDeleteRenameIo("mid-copy", isLive,
-          new java.io.File(path).getParent)) {
-        IndexLifecycle.swapInParquet(spark, path)(fresh)
-      }
-    }
-    val served = readIds(path)
-    assert(served.nonEmpty, "torn live dir unexpectedly empty")
-    assert(served.subsetOf((100L until 200L).toSet),
-      s"expected rows only from the NEW world, got ${served.take(5)}")
-    assert(served.size < 100,
-      s"expected a PARTIAL new world, got all ${served.size} rows — the tear did nothing")
-  }
-
-  // ── pointer mode: the same fake, all four scenarios, one world ──────
-  //
-  // r19 verdict #1's done-criterion: with the SAME CopyDeleteRenameIo
-  // fake installed, a pointer-mode artifact reads exactly one COMPLETE
-  // world in every scenario — because the pointer-flip protocol issues
-  // ZERO renames of live data (pinned by the fake's invocation counter),
-  // there is nothing for the copy+delete store to tear.
-
-  test("POINTER MODE: all four torn-rename scenarios read exactly one world — the protocol issues zero renames") {
-    val scenarios = Seq[(String, org.apache.hadoop.fs.Path => Boolean)](
-      ("mid-copy", isOld), ("before-delete", isOld),
-      ("mid-delete", isOld), ("mid-copy", isLive))
-    scenarios.foreach { case (phase, matcher) =>
-      val (path, fresh) = pointerFixture()
-      val fake = new CopyDeleteRenameIo(phase, matcher,
-        new java.io.File(path).getParent)
-      withFake(fake) {
-        IndexLifecycle.swapInParquet(spark, path)(fresh)
-      }
-      // exactly the complete NEW world — never partial, never mixed
-      assert(readPtrIds(path) == (100L until 200L).toSet,
-        s"scenario ($phase): pointer-mode swap did not read one complete world")
-      // and the reason: the generation flip never called rename at all
-      assert(fake.invoked == 0,
-        s"scenario ($phase): pointer mode issued ${fake.invoked} rename(s) " +
-          "on fixture paths — the whole point is that it must issue none")
-    }
   }
 
   test("POINTER MODE: a crash between generation write and commit leaves readers on exactly the old world; the retry lands the new") {
     val (path, fresh) = pointerFixture()
     // simulate the one crash window the flip protocol has: a COMPLETE
-    // generation written, the commit never created (the analog of the
-    // in-place protocol's between-renames window — except here the old
-    // world is still fully committed, not missing)
+    // generation written, the commit never created — the old world is
+    // still fully committed
     fresh.write.parquet(s"$path/gen-orphan0000")
     assert(readPtrIds(path) == (0L until 100L).toSet,
       "an uncommitted generation must be invisible to readers")

@@ -471,7 +471,7 @@ class SimilaritySpec extends SparkSpec {
     // the REAL probe filter shape (OR of (table, bucket) pairs) must
     // reach the postings scan with a NON-EMPTY pushed payload — matching
     // only the header would pass even when nothing pushes
-    val plan = spark.read.parquet(s"$dir/postings.parquet")
+    val plan = spark.read.parquet(s"${IndexLifecycle.resolveIndexDir(spark, dir)}/postings.parquet")
       .filter((col("table") === 0 && col("bucket") === 3) ||
         (col("table") === 1 && col("bucket") === 7))
       .queryExecution.executedPlan.toString
@@ -480,9 +480,9 @@ class SimilaritySpec extends SparkSpec {
       s"probe filter shape not pushed (empty payload?):\n$plan")
     // postings carry ids only (finding 22): the vector payload must not
     // be duplicated per table
-    assert(!spark.read.parquet(s"$dir/postings.parquet")
+    assert(!spark.read.parquet(s"${IndexLifecycle.resolveIndexDir(spark, dir)}/postings.parquet")
       .columns.contains("embedding"), "postings leaked the vector payload")
-    val meta = spark.read.parquet(s"$dir/meta.parquet").head()
+    val meta = spark.read.parquet(s"${IndexLifecycle.resolveIndexDir(spark, dir)}/meta.parquet").head()
     assert(meta.getAs[Int]("planes") == Similarity.probePlanesFor(emb.count()),
       "persisted sizing drifted from the in-query rule")
     // append lifecycle: a vector appended AFTER the build (signatures
@@ -701,7 +701,7 @@ class SimilaritySpec extends SparkSpec {
     val streamTags = graft.streaming.Streaming.annProbeStream(
         qDf, "vec_id", "embedding", dir, tau = tau, multiProbe = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val meta = spark.read.parquet(s"$dir/meta.parquet").head()
+    val meta = spark.read.parquet(s"${IndexLifecycle.resolveIndexDir(spark, dir)}/meta.parquet").head()
     val (planesP, tablesP, dimP, seedP) =
       (meta.getAs[Int]("planes"), meta.getAs[Int]("tables"),
         meta.getAs[Int]("dim"), meta.getAs[Long]("seed"))
@@ -815,7 +815,7 @@ class SimilaritySpec extends SparkSpec {
     // the OCCUPANCY-SIZED q (multiProbeFor, r14 verdict #3): same dir,
     // q sized from the persisted meta + live vector count — the recall
     // gate must hold at the sized default the _mp serve entries use
-    val meta = spark.read.parquet(s"$dir/meta.parquet").head()
+    val meta = spark.read.parquet(s"${IndexLifecycle.resolveIndexDir(spark, dir)}/meta.parquet").head()
     val sizedQ = Similarity.multiProbeFor(spark, dir)
     assert(sizedQ == Similarity.multiProbeForSized(4000L,
       meta.getAs[Int]("planes"), meta.getAs[Int]("tables")),

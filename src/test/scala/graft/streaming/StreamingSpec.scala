@@ -1008,7 +1008,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("a restarted probe stream serves the rebuilt index (the maintenance-cadence contract)") {
-    // rebuildIndex's whole-dir swap deletes the files a RUNNING stream's
+    // rebuildIndex's generation flip deletes the files a RUNNING stream's
     // plan snapshot points at (loud failure by design, IndexLifecycle
     // Scaladoc); the operable contract is quiesce → rebuild → restart.
     // Pin the happy path: a stream started AFTER the rebuild serves the
@@ -1045,22 +1045,18 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("POINTER MODE: probe stream serves the committed generation; a mid-stream tombstone flip fails LOUDLY; a fresh plan serves it") {
-    // streams on pointer roots resolve the pointer ONCE at plan time
-    // (annProbeStream's plan-snapshot contract). The removal path is
-    // where pointer mode differs mechanically: removeIds on a pointer
-    // root ALWAYS tombstones, via a generation flip of the NESTED
-    // deletes pointer root — the per-batch freshness guard must see
-    // that flip (a new commit file in the artifact root's listing) and
-    // fail the running stream exactly like the plain-dir append arm.
+    // streams resolve the committed generation ONCE at plan time
+    // (annProbeStream's plan-snapshot contract). A tombstoned remove
+    // flips the NESTED deletes root inside that generation — the
+    // per-batch freshness guard must see that flip (a new commit file in
+    // the tombstone root's listing) and fail the running stream.
     val rnd = new scala.util.Random(97)
     val base = Array.fill(16)(rnd.nextGaussian().toFloat)
     def near(eps: Float) = base.map(_ + eps)
     val corpus = (1L to 10L).map(i => (i, near(0.01f * i)))
       .toDF("vec_id", "embedding").localCheckpoint(true)
     val root = java.nio.file.Files.createTempDirectory("graft_annps_ptr").toString + "/idx"
-    graft.ops.IndexLifecycle.buildIndexGeneration(spark, root) { gen =>
-      graft.ops.Ivf.buildIndex(corpus, "vec_id", "embedding", gen, maxIter = 5)
-    }
+    graft.ops.Ivf.buildIndex(corpus, "vec_id", "embedding", root, maxIter = 5)
     val qvec = near(-0.02f)
     val mem = MemoryStream[(Long, Array[Float])]
     val q = Streaming.annProbeStream(
@@ -1077,7 +1073,7 @@ class StreamingSpec extends SparkSpec {
       // removal lands WHILE the stream runs: the deletes flip must trip
       // the guard on the next micro-batch — loud, never silently stale
       graft.ops.IndexLifecycle.removeIds(spark, root,
-        Seq(1L).toDF("vec_id"), "vec_id")
+        Seq(1L).toDF("vec_id"), "vec_id", tombstone = true)
       mem.addData(Seq((200L, qvec)))
       val boom = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         q.processAllAvailable()
@@ -1109,8 +1105,8 @@ class StreamingSpec extends SparkSpec {
   test("rebuild under a RUNNING probe stream fails LOUDLY on the next micro-batch") {
     // The other half of the maintenance-cadence contract (r14 verdict
     // #5): rebuildIndex's scaladoc promises that a running stream's plan
-    // snapshot — which points at the pre-rebuild files the whole-dir
-    // swap deletes — raises on its next micro-batch rather than serving
+    // snapshot — which points at the pre-rebuild generation the flip's
+    // GC deletes — raises on its next micro-batch rather than serving
     // anything stale. Pin it like the append-visibility contract: a
     // Spark upgrade that silently re-lists (or ignores missing files)
     // must fail HERE, not ship stale cells in production.
@@ -1143,7 +1139,7 @@ class StreamingSpec extends SparkSpec {
         .takeWhile(_ != null).take(20).toSeq
       assert(chain.exists(c => c.isInstanceOf[java.io.FileNotFoundException] ||
         String.valueOf(c.getMessage).toLowerCase.contains("file")),
-        s"stream failed, but not on the swapped files: $e")
+        s"stream failed, but not on the GC'd files: $e")
       assert(!spark.table("sink_rbrun").collect().exists(_.getLong(0) == 200L),
         "post-rebuild micro-batch served results from the stale plan snapshot")
     } finally q.stop()
@@ -1154,7 +1150,7 @@ class StreamingSpec extends SparkSpec {
     // contract: the tombstone set resolves at PLAN time and a mid-stream
     // removeIds touched no file the plan lists, so the stream kept
     // tagging the removed id until restart. r18 closes the asymmetry:
-    // annProbeStream's default tombstoneFreshnessGuard re-lists
+    // annProbeStream's tombstoneFreshnessGuard re-lists
     // deletes.parquet every micro-batch (the static side of a
     // stream-static join re-executes per batch) and fails the query
     // loudly on change — the rebuild contract, extended to removes. The
@@ -1253,7 +1249,7 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(tags.exists(_._1 == 100L) && !tags.contains((100L, 3L)),
         s"fixture drifted: $tags")
-      // brand-new id: postings/vectors append + a SKIPPED undelete swap —
+      // brand-new id: postings/vectors append + a SKIPPED undelete rewrite —
       // the stream must survive and keep the plan snapshot (id 50
       // invisible until restart)
       graft.ops.Similarity.appendLshIndex(
@@ -1262,10 +1258,10 @@ class StreamingSpec extends SparkSpec {
       mem.addData(Seq((200L, qvec))); q.processAllAvailable()
       assert(tags.exists(_._1 == 200L),
         "append of new ids over a backlog broke the guarded stream — " +
-          "the undelete swap ran without an intersection")
+          "the undelete rewrite ran without an intersection")
       assert(!tags.exists(t => t._1 == 200L && t._2 == 50L),
         "mid-stream append became visible to the running plan")
-      // re-insert of the tombstoned id: the swap must run and the guard
+      // re-insert of the tombstoned id: the rewrite must run and the guard
       // must trip — the plan's stale tombstone filter would otherwise
       // keep suppressing id 3 silently
       graft.ops.Similarity.appendLshIndex(
@@ -1279,45 +1275,6 @@ class StreamingSpec extends SparkSpec {
       assert(chain.exists(c => String.valueOf(c.getMessage)
           .contains("changed while this probe stream was running")),
         s"un-deleting append failed the stream, but not via the guard: $e")
-    } finally q.stop()
-  }
-
-  test("tombstoneGuard = false opts back into stale-until-restart (the pre-r18 contract, now explicit)") {
-    // The opt-out arm of the loud-or-fresh contract: a topology with an
-    // external freshness protocol can disable the per-batch guard, and
-    // gets EXACTLY the old documented semantics — a mid-stream removeIds
-    // neither fails the query nor affects the running plan. One arm
-    // (LSH) suffices: the guard attaches in annProbeStream BEFORE the
-    // layout dispatch, so opting out is layout-independent.
-    val rnd = new scala.util.Random(101)
-    val base = Array.fill(16)(rnd.nextGaussian().toFloat)
-    def near(eps: Float) = base.map(_ + eps)
-    val corpus = (1L to 10L).map(i => (i, near(0.01f * i)))
-      .toDF("vec_id", "embedding").localCheckpoint(true)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_annps_tomb_optout").toString
-    graft.ops.Similarity.buildLshIndex(corpus, "vec_id", "embedding", dir)
-    val qvec = near(-0.02f)
-    val mem = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.annProbeStream(
-        mem.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-        dir, tau = 0.9, nprobe = 16, tombstoneGuard = false)
-      .writeStream.format("memory").queryName("sink_tomb_optout")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(Seq((100L, qvec))); q.processAllAvailable()
-      val t0 = spark.table("sink_tomb_optout")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(t0.contains((100L, 3L)), s"fixture id 3 not tagging: $t0")
-      graft.ops.IndexLifecycle.removeIds(spark, dir,
-        Seq(3L).toDF("vec_id"), "vec_id")
-      mem.addData(Seq((200L, qvec))); q.processAllAvailable()
-      val mid = spark.table("sink_tomb_optout")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(mid.contains((200L, 3L)),
-        "opted-out stream no longer serves the plan snapshot — the " +
-          "tombstoneGuard = false contract changed; update annProbeStream's " +
-          "Scaladoc and this pin together")
     } finally q.stop()
   }
 }
