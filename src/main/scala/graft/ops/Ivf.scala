@@ -34,15 +34,159 @@ object Ivf {
 
   /** Train centroids (driver-held, broadcast into expressions). Seeded,
     * deterministic. `sampleFraction < 1` for corpora where even one pass
-    * for training is too much. */
+    * for training is too much. A training frame under the driver-fit
+    * gate ([[driverTrainingSet]]) is collected once and fit on the
+    * driver ([[fitOnDriver]]); above it MLlib's distributed KMeans runs,
+    * so the 100 TB path stays distributed. */
   def trainCentroids(emb: DataFrame, vecCol: String, k: Int,
                      seed: Long = 42L, sampleFraction: Double = 1.0,
                      maxIter: Int = 10): Array[Array[Double]] = {
-    val data = (if (sampleFraction < 1.0) emb.sample(withReplacement = false, sampleFraction, seed) else emb)
-      .select(array_to_vector(col(vecCol).cast("array<double>")).as("features"))
+    val data = trainingFrame(emb, vecCol, seed, sampleFraction)
+    probeDim(data).flatMap(driverTrainingSet(data, k, _)) match {
+      case Some(points) => fitOnDriver(points, k, seed, maxIter)
+      case None => fitMllib(data, TrainCol, k, seed, maxIter)
+    }
+  }
+
+  private[ops] val TrainCol = "__tv"
+
+  /** The seeded training sample as one `array<double>` column named
+    * [[TrainCol]]. */
+  private[ops] def trainingFrame(emb: DataFrame, vecCol: String, seed: Long,
+                                 sampleFraction: Double): DataFrame =
+    (if (sampleFraction < 1.0) emb.sample(withReplacement = false, sampleFraction, seed) else emb)
+      .select(col(vecCol).cast("array<double>").as(TrainCol))
+
+  // The driver-fit gate. A Lloyd iteration costs points·k·dim distance
+  // terms: below DriverFitMaxWork one driver thread finishes the whole fit
+  // faster than MLlib schedules its k-means‖ init and per-iteration jobs
+  // (PERF.md finding 47 measures the crossover). DriverFitMaxBytes bounds
+  // the collected sample at points·dim·8 B of driver heap.
+  private val DriverFitMaxWork = 1L << 27
+  private val DriverFitMaxBytes = 64L << 20
+
+  /** The training vectors of `data` (a [[trainingFrame]] of `dim`-wide
+    * vectors) collected to the driver by one
+    * [[Relational.collectUnderGate]] when a `k`-centre fit over them is
+    * under the gate; None above it. */
+  private[ops] def driverTrainingSet(data: DataFrame, k: Int,
+                                     dim: Int): Option[Array[Array[Double]]] = {
+    val d = math.max(dim, 1).toLong
+    val limit = math.min(DriverFitMaxBytes / (8L * d), DriverFitMaxWork / (k.toLong * d))
+    Relational.collectUnderGate(data.select(TrainCol), limit).map(_.map { r =>
+      val v = r.getSeq[Double](0).toArray
+      require(v.length == dim, s"training vectors of mixed dimension: ${v.length} vs $dim")
+      v
+    })
+  }
+
+  /** The vector width from one probe row; None on an empty frame (MLlib
+    * then rejects it with its own message). */
+  private def probeDim(data: DataFrame): Option[Int] =
+    data.select(size(col(TrainCol))).take(1).headOption.map(_.getInt(0))
+
+  /** MLlib's distributed KMeans (k-means‖ init, one job per Lloyd
+    * iteration) over the `array<double>` column `vecCol`. */
+  private[ops] def fitMllib(data: DataFrame, vecCol: String, k: Int, seed: Long,
+                            maxIter: Int): Array[Array[Double]] =
     new KMeans().setK(k).setSeed(seed).setMaxIter(maxIter)
       .setFeaturesCol("features")
-      .fit(data).clusterCenters.map(_.toArray)
+      .fit(data.select(array_to_vector(col(vecCol)).as("features")))
+      .clusterCenters.map(_.toArray)
+
+  /** Seeded k-means on the driver: greedy k-means++ init (Arthur &
+    * Vassilvitskii, SODA 2007) then Lloyd with MLlib's stopping rule
+    * (`maxIter` iterations, or every centre moved at most 1e-4). Returns
+    * only distinct centres: with at most k distinct points it returns
+    * those points, and k-means++ never picks a point twice (a chosen
+    * point's D² weight is 0). An empty cluster keeps its old centre, as
+    * in MLlib. Ties go to the lowest centre index, as in
+    * [[graft.functions.NearestCells]]. */
+  private[ops] def fitOnDriver(points: Array[Array[Double]], k: Int, seed: Long,
+                               maxIter: Int): Array[Array[Double]] = {
+    require(k >= 1 && points.nonEmpty, s"need k >= 1 and points, got k=$k, ${points.length} points")
+    val distinct = points.map(_.toSeq).distinct
+    if (distinct.length <= k) return distinct.map(_.toArray)
+    val rnd = new java.util.Random(seed)
+    val centres = new Array[Array[Double]](k)
+    centres(0) = points(rnd.nextInt(points.length)).clone()
+    var d2 = points.map(sqDist(_, centres(0)))
+    // greedy k-means++: each step draws 2 + ln k candidates by D² weight
+    // and keeps the one that lowers the potential most (plain k-means++
+    // merges planted blobs where MLlib's k-means‖ does not)
+    val trials = 2 + math.log(k.toDouble).toInt
+    for (c <- 1 until k) {
+      var best: Array[Double] = null
+      var bestCost = Double.MaxValue
+      for (_ <- 0 until trials) {
+        val cand = points(drawByWeight(d2, rnd.nextDouble() * d2.sum))
+        val nd2 = new Array[Double](points.length)
+        var cost = 0.0
+        var i = 0
+        while (i < points.length) {
+          nd2(i) = sqDistBelow(points(i), cand, d2(i)); cost += nd2(i); i += 1
+        }
+        if (cost < bestCost) { bestCost = cost; best = nd2; centres(c) = cand.clone() }
+      }
+      d2 = best
+    }
+    val dim = centres(0).length
+    var iter = 0
+    var converged = false
+    while (iter < maxIter && !converged) {
+      val sums = Array.ofDim[Double](k, dim)
+      val counts = new Array[Long](k)
+      for (p <- points) {
+        val j = nearest(p, centres)
+        counts(j) += 1
+        var i = 0
+        while (i < dim) { sums(j)(i) += p(i); i += 1 }
+      }
+      converged = true
+      for (j <- 0 until k if counts(j) > 0) {
+        val moved = sums(j).map(_ / counts(j))
+        if (sqDist(moved, centres(j)) > 1e-4 * 1e-4) converged = false
+        centres(j) = moved
+      }
+      iter += 1
+    }
+    centres.map(_.toSeq).distinct.map(_.toArray)
+  }
+
+  /** The index where the running sum of the positive `weights` reaches
+    * `r`; float round-off past the end takes the last positive one. */
+  private def drawByWeight(weights: Array[Double], r0: Double): Int = {
+    var r = r0
+    var i = 0
+    while (i < weights.length) {
+      if (weights(i) > 0.0) { r -= weights(i); if (r <= 0.0) return i }
+      i += 1
+    }
+    weights.lastIndexWhere(_ > 0.0)
+  }
+
+  private def sqDist(a: Array[Double], b: Array[Double]): Double =
+    sqDistBelow(a, b, Double.MaxValue)
+
+  /** min(|a − b|², bound), leaving the sum early once it reaches `bound`
+    * (the terms are non-negative, so the rest cannot bring it back). */
+  private def sqDistBelow(a: Array[Double], b: Array[Double], bound: Double): Double = {
+    var d = 0.0; var i = 0
+    while (i < a.length && d < bound) { val diff = a(i) - b(i); d += diff * diff; i += 1 }
+    math.min(d, bound)
+  }
+
+  /** Index of the nearest centre, the lowest on a tie. */
+  private def nearest(p: Array[Double], centres: Array[Array[Double]]): Int = {
+    var best = 0
+    var bestD = Double.MaxValue
+    var c = 0
+    while (c < centres.length) {
+      val d = sqDistBelow(p, centres(c), bestD)
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
   }
 
   private def flat(centroids: Array[Array[Double]]): (Array[Double], Int, Int) =
@@ -198,17 +342,26 @@ object Ivf {
                              sampleFraction: Double = 1.0,
                              maxIter: Int = 10): ResidualQuantizer = {
     require(k1 >= 2 && k2 >= 2, s"need k1, k2 >= 2, got $k1, $k2")
-    val c1 = trainCentroids(emb, vecCol, k1, seed, sampleFraction, maxIter)
     // sample BEFORE the residual projection: at 100 TB, projecting
     // residuals over the whole corpus only to sample 0.1% of them for
     // training would be a full wasted pass — both levels train on the
     // same seeded sample
-    val base =
-      if (sampleFraction < 1.0) emb.sample(withReplacement = false, sampleFraction, seed)
-      else emb
-    val resid = base.select(residual(col(vecCol), c1).as("__r"))
-    val c2 = trainCentroids(resid, "__r", k2, seed + 1, 1.0, maxIter)
-    ResidualQuantizer(c1, c2)
+    val data = trainingFrame(emb, vecCol, seed, sampleFraction)
+    probeDim(data).flatMap(driverTrainingSet(data, math.max(k1, k2), _)) match {
+      case Some(points) =>
+        // under the gate the level-2 residuals come from the same
+        // collected sample: no second pass
+        val c1 = fitOnDriver(points, k1, seed, maxIter)
+        val resid = points.map { p =>
+          val c = c1(nearest(p, c1))
+          Array.tabulate(p.length)(i => p(i) - c(i))
+        }
+        ResidualQuantizer(c1, fitOnDriver(resid, k2, seed + 1, maxIter))
+      case None =>
+        val c1 = fitMllib(data, TrainCol, k1, seed, maxIter)
+        val resid = data.select(residual(col(TrainCol), c1).as("__r"))
+        ResidualQuantizer(c1, fitMllib(resid, "__r", k2, seed + 1, maxIter))
+    }
   }
 
   /** (cell, id, vec) inverted file under the composite two-level cell. */

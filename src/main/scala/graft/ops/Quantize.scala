@@ -45,36 +45,31 @@ object Quantize {
   /** Train PQ codebooks: one seeded KMeans per SUBSPACE over the
     * corpus' subvectors (sampled via `sampleFraction` when even one
     * training pass is too much — the [[Ivf.trainCentroids]] posture).
-    * The m fits are INDEPENDENT (disjoint subspaces, fixed per-subspace
-    * seeds) and dominated by per-fit job-scheduling overhead at k=16 ×
-    * dsub-wide rows, so they run CONCURRENTLY — Spark's scheduler
-    * interleaves the m jobs and the wall is one fit plus contention,
-    * not m fits end-to-end (measured 7.4 → ~2 s on the registered
-    * query). Results are unchanged by the concurrency: each fit's seed
-    * and input are fixed per subspace. */
+    * Under [[Ivf.driverTrainingSet]]'s gate (callers train on a bounded
+    * sample, see pqTopK) the sample is collected ONCE and all m
+    * subspaces fit on the driver from that array; above it each
+    * subspace runs MLlib's distributed fit in turn. Subspace j's fit is
+    * seeded with seed + j either way. */
   def trainPq(emb: DataFrame, vecCol: String, m: Int = 8, k: Int = 16,
               seed: Long = 42L, sampleFraction: Double = 1.0): PqCodebooks = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val dim = emb.select(size(col(vecCol))).head().getInt(0)
     require(m > 0 && dim % m == 0, s"dim $dim not divisible into $m subspaces")
     require(k > 1 && k <= 256, s"k $k outside (1, 256] — codes are bytes")
     val dsub = dim / m
-    val books = Await.result(
-      Future.sequence((0 until m).map { j =>
-        // blocking: each future runs a Spark action; mark it so the
-        // shared pool spawns compensation threads instead of starving
-        // other users of the global EC. A failed fit fails the whole
-        // train (Future.sequence fails fast; sibling fits run to
-        // completion — train on a bounded frame, see pqTopK, so an
-        // orphaned sibling is a small job, not a corpus scan).
-        Future(scala.concurrent.blocking(Ivf.trainCentroids(
-          emb.select(slice(col(vecCol), j * dsub + 1, dsub).as("__sub")),
-          "__sub", k, seed + j, sampleFraction)))
-      }), Duration.Inf).toArray
+    val data = Ivf.trainingFrame(emb, vecCol, seed, sampleFraction)
+    val books = Ivf.driverTrainingSet(data, k, dim) match {
+      case Some(points) =>
+        Array.tabulate(m)(j => Ivf.fitOnDriver(
+          points.map(_.slice(j * dsub, (j + 1) * dsub)), k, seed + j, MaxIter))
+      case None =>
+        Array.tabulate(m)(j => Ivf.fitMllib(
+          data.select(slice(col(Ivf.TrainCol), j * dsub + 1, dsub).as("__sub")),
+          "__sub", k, seed + j, MaxIter))
+    }
     PqCodebooks(m, k, dsub, books)
   }
+
+  private val MaxIter = 10
 
   /** PQ code column: array<int> of `m` per-subspace nearest-centroid
     * ids — one [[graft.functions.NearestCells]] compiled pass per
@@ -119,7 +114,7 @@ object Quantize {
     * against the broadcast query, so PQ distortion costs recall only
     * when a true neighbor falls outside the shortlist, not precision
     * inside it. Returns (idCol, sim) like [[Similarity.bruteForceTopK]];
-    * KMeans float-reduction order makes codebooks hash-unstable →
+    * codebooks come from a seeded k-means DuckDB cannot replay →
     * rows-only query, recall + planted-duplicate specs in QuantizeSpec. */
   def pqTopK(emb: DataFrame, idCol: String, vecCol: String,
              query: DataFrame, queryVecCol: String, k: Int,
@@ -181,7 +176,8 @@ object Quantize {
     * this in-query form (a serving deployment materializes the code
     * table once). Delegates to [[ivfPqSized]] — past the single-level
     * cell limit the two-level residual coarse quantizer takes over.
-    * KMeans reduction order → rows-only; recall + fallback specs. */
+    * Seeded k-means cells and codebooks → rows-only; recall + fallback
+    * specs. */
   def ivfPqTopK(emb: DataFrame, idCol: String, vecCol: String,
                 query: DataFrame, queryVecCol: String, k: Int,
                 nprobe: Int = 4, m: Int = 8, codebookSize: Int = 16,

@@ -52,6 +52,20 @@ class ConventionsSpec extends AnyFunSuite {
     } yield s"$path:${text.take(m.start).count(_ == '\n') + 1}"
   }
 
+  /** Every MLlib KMeans construction as "File.scala:enclosingDef". A
+    * quantizer fit goes through Ivf.trainCentroids' gate: under it the
+    * driver fits, above it the one distributed arm does. */
+  def kmeansConstructions(sources: Seq[(String, String)]): Seq[String] = {
+    val definition = """\bdef\s+(\w+)""".r
+    for {
+      (path, text) <- sources
+      m <- """\bnew\s+(?:[\w.]*\.)?KMeans\b""".r.findAllMatchIn(text)
+    } yield {
+      val owner = definition.findAllMatchIn(text.take(m.start)).map(_.group(1)).toSeq.lastOption
+      s"${path.replace('\\', '/').split('/').last}:${owner.getOrElse("")}"
+    }
+  }
+
   /** The programs `src/main` may hold, each with why it stays. */
   val AllowedMains: Map[String, String] = Map(
     "graft.Bench" -> "the 157-query noop-sink bench and its floors",
@@ -87,6 +101,15 @@ class ConventionsSpec extends AnyFunSuite {
       Seq("src/main/scala/graft/ops/Swap.scala:2", "src/main/scala/graft/ops/Move.scala:2"))
     // the scan is scoped to the index code
     assert(renameCalls(Seq("src/main/scala/graft/tools/X.scala" -> "fs.rename(a, b)")).isEmpty)
+  }
+
+  test("MLlib KMeans is built only in Ivf's distributed fit arm") {
+    assert(kmeansConstructions(mainSources) == Seq("Ivf.scala:fitMllib"),
+      kmeansConstructions(mainSources))
+    // negative control: a planted fit that skips the gate is caught
+    val planted = mainSources :+ ("src/main/scala/graft/ops/Cluster.scala" ->
+      "object Cluster {\n  def fit(df: DataFrame) = new org.apache.spark.ml.clustering.KMeans().setK(8).fit(df)\n}")
+    assert(kmeansConstructions(planted).toSet -- Set("Ivf.scala:fitMllib") == Set("Cluster.scala:fit"))
   }
 
   test("every program in src/main is on the allowlist") {

@@ -26,4 +26,5 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf0001: String = TestSpark.sf0001
+  def sf001: String = TestSpark.sf0001.stripSuffix("sf0.001") + "sf0.01"
 }

@@ -177,7 +177,7 @@ class ConcurrentServeSpec extends SparkSpec {
       s"${IndexLifecycle.resolveIndexDir(spark, dir)}/deletes.parquet").exists())
   }
 
-  test("POINTER MODE: probes survive a live rebuild's generation flip + old-generation GC") {
+  test("probes survive a live rebuild's generation flip + old-generation GC") {
     // the riskiest reader path: a probe resolves the
     // pointer, reads the generation's files — and the rebuild commits a
     // NEW generation and GC-DELETES the one being read. The probe must
@@ -214,7 +214,7 @@ class ConcurrentServeSpec extends SparkSpec {
     assert(gens.length == 1, s"stale generations survived the flip GC: ${gens.mkString(",")}")
   }
 
-  test("POINTER MODE: probes survive a live generation-flip compaction applying a tombstone backlog") {
+  test("probes survive a live generation-flip compaction applying a tombstone backlog") {
     val corpus = emb.localCheckpoint(true)
     val query = corpus.filter($"vec_id" === 0)
     val root = java.nio.file.Files.createTempDirectory("graft_conc_ptrc").toString + "/idx"
@@ -242,34 +242,11 @@ class ConcurrentServeSpec extends SparkSpec {
     // the flip IS the backlog clear
     assert(IndexLifecycle.indexStats(spark, root).head()
       .getAs[Long]("tombstones") == 0L)
-  }
-
-  test("IVF probes survive a live compaction applying + clearing cell-layout tombstones") {
-    val corpus = emb.localCheckpoint(true)
-    val query = corpus.filter($"vec_id" === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_conc_ivf").toString + "/idx"
-    Ivf.buildIndex(corpus.filter($"vec_id" =!= 0), "vec_id", "embedding", dir, maxIter = 5)
-    val top = Ivf.probeIndex(spark, dir, "vec_id", "embedding",
-      query, "embedding", k = 20).select("vec_id").collect().map(_.getLong(0))
-    val victims = corpus.filter(!$"vec_id".isin(top.map(java.lang.Long.valueOf): _*))
-      .filter($"vec_id" =!= 0).limit(5).select("vec_id").localCheckpoint(true)
-    IndexLifecycle.removeIds(spark, dir, victims, "vec_id", tombstone = true)
-    val expect = Ivf.probeIndex(spark, dir, "vec_id", "embedding",
-      query, "embedding", k = 5).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val (errors, answers) = hammer(
-      readers = 3,
-      probe = () => Ivf.probeIndex(spark, dir, "vec_id", "embedding",
-        query, "embedding", k = 5).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq,
-      mutate = () => IndexLifecycle.compactIndex(spark, dir))
-    assert(errors.isEmpty,
-      s"a live probe failed during cell compaction: ${errors.headOption}")
-    assert(answers == Set(expect),
-      s"probe answers drifted during cell compaction: ${answers.map(_.take(3))}")
     assert(!new java.io.File(
-      s"${IndexLifecycle.resolveIndexDir(spark, dir)}/deletes.parquet").exists())
+      s"${IndexLifecycle.resolveIndexDir(spark, root)}/deletes.parquet").exists())
   }
 
-  test("POINTER MODE: a mid-probe mutation INSIDE the live generation trips the fence; the retry serves the new world (ADVICE r20)") {
+  test("a mid-probe mutation INSIDE the live generation trips the fence; the retry serves the new world (ADVICE r20)") {
     // The root epoch keys on commit files only, so it is deliberately
     // blind to everything but flips — which made it blind to a
     // removeIds/undeleteTombstones flip of the NESTED deletes.parquet
@@ -318,7 +295,7 @@ class ConcurrentServeSpec extends SparkSpec {
       s"the retried probe's answer is not the post-remove world: $out vs $expectNew")
   }
 
-  test("POINTER MODE: a mid-probe APPEND does not trip the generation fence (ADVICE r21 — benign-by-contract churn never burns the retry budget)") {
+  test("a mid-probe APPEND does not trip the generation fence (ADVICE r21 — benign-by-contract churn never burns the retry budget)") {
     // The inverse pin of the removeIds test above: append files landing
     // inside the live generation's artifact stores are the established
     // benign plan-snapshot class (postings-first orphan-drop /
@@ -354,7 +331,7 @@ class ConcurrentServeSpec extends SparkSpec {
     assert(out.nonEmpty)
   }
 
-  test("POINTER MODE: probes race a removeIds tombstone flip inside the live generation (ADVICE r20 hammer)") {
+  test("probes race a removeIds tombstone flip inside the live generation (ADVICE r20 hammer)") {
     val corpus = emb.localCheckpoint(true)
     val query = corpus.filter($"vec_id" === 0)
     val root = java.nio.file.Files.createTempDirectory("graft_conc_ptrr").toString + "/idx"

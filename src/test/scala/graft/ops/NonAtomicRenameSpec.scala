@@ -29,7 +29,7 @@ class NonAtomicRenameSpec extends SparkSpec {
     spark.read.parquet(phys).as[Long].collect().toSet
   }
 
-  test("POINTER MODE: a crash between generation write and commit leaves readers on exactly the old world; the retry lands the new") {
+  test("a crash between generation write and commit leaves readers on exactly the old world; the retry lands the new") {
     val (path, fresh) = pointerFixture()
     // simulate the one crash window the flip protocol has: a COMPLETE
     // generation written, the commit never created — the old world is

@@ -1044,7 +1044,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("POINTER MODE: probe stream serves the committed generation; a mid-stream tombstone flip fails LOUDLY; a fresh plan serves it") {
+  test("probe stream serves the committed generation; a mid-stream tombstone flip fails LOUDLY; a fresh plan serves it") {
     // streams resolve the committed generation ONCE at plan time
     // (annProbeStream's plan-snapshot contract). A tombstoned remove
     // flips the NESTED deletes root inside that generation — the
