@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
+import graft.engine.Tables
 
 object Bench {
 
@@ -372,7 +373,7 @@ object Bench {
     // doesn't absorb session startup
     try {
       spark.range(1000000L).selectExpr("sum(id)").collect()
-      spark.read.parquet(s"$sfDir/region.parquet").count()
+      Tables.parquet(spark, s"$sfDir/region.parquet").count()
     } catch { case NonFatal(_) => () }
     // SPARK_GRAFT_ONLY=a,b,c restricts the run to named queries — the
     // session-composition A/B lever (does a query's wall depend on the

@@ -1,6 +1,8 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import java.util.UUID
 import java.util.concurrent.{ConcurrentHashMap, Executors, ThreadFactory, TimeUnit}
 import scala.util.control.NonFatal
@@ -22,8 +24,11 @@ import scala.util.control.NonFatal
   * collides distinct queries sharing a token multiset (`a=1 AND b=2` vs
   * `a=2 AND b=1`). We key on Catalyst's canonicalized analyzed plan
   * instead: strictly sound (same semantics ⇒ same key) and it still
-  * honors the reference's AND-commutativity reuse. TTL matches the
-  * reference's 44 days by default; entries are evicted lazily on probe.
+  * honors the reference's AND-commutativity reuse. The plan names a
+  * table by path, not by contents, so the key also carries a digest of
+  * the files the plan reads ([[QueryService.inputDigest]]): a rewritten
+  * table misses the cache. TTL matches the reference's 44 days by
+  * default; entries are evicted lazily on probe.
   *
   * Scale: results are written partition-parallel (no `coalesce(1)` on the
   * hot path — a 100 TB extract must not serialize through one task);
@@ -48,6 +53,24 @@ object QueryService {
 
   val DefaultCacheTtlMillis: Long = 3801600L * 1000 // 44 days, app/main.py:488
 
+  /** Digest of the files `plan` reads: (path, size, mtime) of every
+    * file each file-source leaf (parquet, ORC, CSV; joins and subqueries
+    * included) listed when its frame was built — no extra listing. */
+  private[engine] def inputDigest(plan: LogicalPlan): String = {
+    val files = plan.collectWithSubqueries { case l: LogicalRelation => l.relation }
+      .flatMap {
+        case h: HadoopFsRelation => h.location match {
+          case index: PartitioningAwareFileIndex =>
+            index.allFiles().map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}")
+          case index => index.inputFiles.toSeq
+        }
+        case _ => Nil
+      }
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    files.sorted.foreach(f => md.update((f + "\n").getBytes("UTF-8")))
+    md.digest().take(12).map("%02x".format(_)).mkString
+  }
+
   /** Result delivery expiry (A18): the reference presigns the result URL
     * for 3600s at poll time (`app/main.py:272`, `app/constants.py:16`). */
   val ResultTtlMillis: Long = 3600L * 1000
@@ -65,8 +88,9 @@ final class QueryService(
   import QueryService._
 
   private val states = new ConcurrentHashMap[String, State]()
-  // semanticHash of the canonicalized analyzed plan -> (queryId, insertedAt)
-  private val planCache = new ConcurrentHashMap[Int, (String, Long)]()
+  // semanticHash of the canonicalized analyzed plan + its input digest
+  // -> (queryId, insertedAt)
+  private val planCache = new ConcurrentHashMap[String, (String, Long)]()
   private val registryLock = new Object
   loadRegistry() // query ids + reuse cache survive a restart (Redis role)
   private val pool = Executors.newFixedThreadPool(poolSize, new ThreadFactory {
@@ -145,7 +169,10 @@ final class QueryService(
     // Analysis errors (bad column, bad syntax deep in `condition`) surface
     // through the async status, like an Athena FAILED execution — the
     // submit endpoint itself stays non-throwing for plan bugs.
-    val key = try df.queryExecution.analyzed.canonicalized.semanticHash() catch {
+    val key = try {
+      val plan = df.queryExecution.analyzed
+      s"${plan.canonicalized.semanticHash()}:${inputDigest(plan)}"
+    } catch {
       case NonFatal(e) => return failedQuery(e)
     }
     val now = clock()
@@ -288,7 +315,9 @@ final class QueryService(
                 java.util.Base64.getDecoder.decode(err), "UTF-8"))
             }
             states.put(id, st) // later lines overwrite: last transition wins
-          case Array("C", key, id, at) => planCache.put(key.toInt, (id, at.toLong))
+          // a key written before the input digest (a bare plan hash)
+          // loads but never matches a current key
+          case Array("C", key, id, at) => planCache.put(key, (id, at.toLong))
           case _ => ()
         }
       } catch { case NonFatal(_) => () }

@@ -1,10 +1,16 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-/** Shared parquet table loader for the testdata star schema.
+/** The one parquet load path of the engine, plus the star-schema loader.
   *
   * Some driver generations store `events.ts` as parquet INT64
   * TIMESTAMP(NANOS), which Spark's vectorized reader rejects outright
@@ -37,7 +43,7 @@ object Tables {
   def read(s: SparkSession, dir: String, name: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    normalizeTs(s.read.parquet(s"$dir/$name.parquet"))
+    normalizeTs(parquet(s, s"$dir/$name.parquet"))
   }
 
   /** ORC registry tables load through the SAME normalization tail (the
@@ -48,4 +54,57 @@ object Tables {
     * identically here. */
   def readOrc(s: SparkSession, dir: String, name: String): DataFrame =
     normalizeTs(s.read.orc(s"$dir/$name.orc"))
+
+  /** `spark.read.parquet(paths: _*)` without its schema-inference job:
+    * the schema comes from the footer of the first data file, read on
+    * the driver (row groups skipped) and converted by the functions
+    * Spark's own inference job runs, under the session's parquet confs.
+    * Partition columns still come from Spark's partition discovery.
+    * With no data file under `paths` the plain read runs, so a missing
+    * path fails as before. */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    withFooterSchema(spark, spark.read, paths)
+
+  /** The partition dirs `dirs` of the partitioned table at `root`, read
+    * as [[parquet]] with `root` as the partition base path: Spark lists
+    * only `dirs`, and the partition columns still come from their
+    * names. */
+  def partitions(spark: SparkSession, root: String, dirs: Seq[String]): DataFrame =
+    withFooterSchema(spark, spark.read.option("basePath", root), dirs)
+
+  private def withFooterSchema(spark: SparkSession, reader: DataFrameReader,
+                               paths: Seq[String]): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    paths.iterator.flatMap(p => firstDataFile(new Path(p), conf)).nextOption() match {
+      case None => reader.parquet(paths: _*)
+      case Some(file) =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS)
+        val schema = ParquetFileFormat.readSchemaFromFooter(
+          new Footer(file.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        reader.schema(schema).parquet(paths: _*)
+    }
+  }
+
+  /** The first data file at or under `p`, skipping the `_*`/`.*` names
+    * Spark's listing skips and descending only into `k=v` partition
+    * dirs; None when `p` is missing or holds no data file. */
+  private def firstDataFile(p: Path, conf: Configuration): Option[FileStatus] = {
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) None
+    else {
+      val st = fs.getFileStatus(p)
+      if (st.isFile) Some(st)
+      else {
+        val kids = fs.listStatus(p).filterNot { k =>
+          val n = k.getPath.getName
+          n.startsWith("_") || n.startsWith(".")
+        }.sortBy(_.getPath.getName)
+        kids.find(_.isFile).orElse(kids.iterator
+          .filter(k => k.isDirectory && k.getPath.getName.contains('='))
+          .flatMap(k => firstDataFile(k.getPath, conf)).nextOption())
+      }
+    }
+  }
 }

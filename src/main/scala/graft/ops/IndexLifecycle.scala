@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Tables
 
 /** Build, remove, compaction and rebuild for the materialized ANN serve
   * indexes ([[Ivf.buildIndex]]/[[Quantize.buildPqIndex]]/
@@ -769,7 +770,7 @@ object IndexLifecycle {
                                     dir: String): Option[DataFrame] = {
     def attempt(): Option[DataFrame] =
       resolvePointer(spark, s"$dir/deletes.parquet")
-        .map(p => spark.read.parquet(p).distinct().localCheckpoint(true))
+        .map(p => Tables.parquet(spark, p).distinct().localCheckpoint(true))
     try attempt()
     catch { case scala.util.control.NonFatal(_) => attempt() }
   }
@@ -786,13 +787,21 @@ object IndexLifecycle {
                                      table: DataFrame, idCol: String,
                                      broadcastLimit: Long =
                                        Dedup.HotShingleBroadcastLimit): DataFrame =
+    tombstoneFilter(spark, dir, idCol, broadcastLimit)(table)
+
+  /** [[minusTombstones]] for several frames of one index: the set loads
+    * and counts once, and the returned filter serves it out of each
+    * frame it is applied to (a single-query probe's probed cells and
+    * its never-short corpus). */
+  private[graft] def tombstoneFilter(spark: SparkSession, dir: String,
+                                     idCol: String,
+                                     broadcastLimit: Long): DataFrame => DataFrame =
     loadTombstones(spark, dir) match {
-      case None => table
+      case None => identity
       case Some(del) =>
         val n = del.count()
-        if (n == 0L) table
-        else idJoin(table, del.select(col(idCol)), idCol, n,
-          broadcastLimit, "left_anti")
+        if (n == 0L) identity
+        else idJoin(_, del.select(col(idCol)), idCol, n, broadcastLimit, "left_anti")
     }
 
   /** Run `body`, retrying when it fails on STALE FILE LISTINGS — the
@@ -1143,7 +1152,7 @@ object IndexLifecycle {
                                         batchIds: DataFrame,
                                         idCol: String): Unit =
     resolvePointer(spark, s"$dir/deletes.parquet").foreach { p =>
-      val deletes = spark.read.parquet(p)
+      val deletes = Tables.parquet(spark, p)
       if (deletes.join(batchIds.select(col(idCol)), Seq(idCol), "left_semi")
           .limit(1).count() > 0L)
         swapInParquet(spark, s"$dir/deletes.parquet")(
@@ -1203,7 +1212,7 @@ object IndexLifecycle {
     initPointerRoot(spark, path)
     val batch = ids.select(col(idCol)).distinct()
     val all = resolvePointer(spark, path)
-      .map(p => spark.read.parquet(p).select(col(idCol)).union(batch).distinct())
+      .map(p => Tables.parquet(spark, p).select(col(idCol)).union(batch).distinct())
       .getOrElse(batch)
     swapInParquet(spark, path)(all)
   }
@@ -1271,10 +1280,10 @@ object IndexLifecycle {
               Seq(idCol), "left_anti"))
         // the postings' id column name = the vectors' non-vector column
         // (the build wrote both from the same (idCol, vecCol) selection)
-        val idCol = spark.read.parquet(s"$phys/postings.parquet").columns
+        val idCol = Tables.parquet(spark, s"$phys/postings.parquet").columns
           .filterNot(Set("table", "bucket")).head
         publishGeneration(spark, root, "compaction") { genPath =>
-          minusDeletes(spark.read.parquet(s"$phys/postings.parquet"), idCol)
+          minusDeletes(Tables.parquet(spark, s"$phys/postings.parquet"), idCol)
             // retried torn appends bake exact-duplicate (table, bucket,
             // id) rows — candidate dedup absorbs them per probe,
             // compaction is where they physically die (indexStats'
@@ -1286,7 +1295,7 @@ object IndexLifecycle {
           // a FULLY-retried append duplicates vectors rows too — exact-
           // row distinct is result-preserving by construction (the same
           // id with a DIFFERENT vector keeps both rows)
-          minusDeletes(spark.read.parquet(s"$phys/vectors.parquet"), idCol)
+          minusDeletes(Tables.parquet(spark, s"$phys/vectors.parquet"), idCol)
             .distinct()
             .write.mode("overwrite").parquet(s"$genPath/vectors.parquet")
           copySmallArtifacts(genPath,
@@ -1305,7 +1314,7 @@ object IndexLifecycle {
         val del: Option[(DataFrame, Long)] =
           loadTombstones(spark, phys).map(d => (d, d.count()))
             .filter(_._2 > 0L)
-        val table = spark.read.parquet(s"$phys/$file")
+        val table = Tables.parquet(spark, s"$phys/$file")
         val affected: Seq[Int] = del match {
           case Some((d, n)) =>
             idJoin(table, d, d.columns.head, n, idBroadcastLimit, "left_semi")
@@ -1405,7 +1414,7 @@ object IndexLifecycle {
     val dir = resolveIndexDir(spark, root)
     val built: Option[Long] =
       if (Ivf.layoutFileExists(spark, dir, "buildinfo.parquet"))
-        Some(spark.read.parquet(s"$dir/buildinfo.parquet")
+        Some(Tables.parquet(spark, s"$dir/buildinfo.parquet")
           .head().getAs[Long]("built_rows"))
       else None
     val (layout, live, cells, maxFiles, tombstones, dupFrac) = cellFileOf(spark, dir) match {
@@ -1415,7 +1424,7 @@ object IndexLifecycle {
         // arm, so the maintenance fraction compares the backlog against
         // the index a compaction would actually rewrite. ONE load of the
         // tombstone frame feeds both the count and the filter.
-        val raw = spark.read.parquet(s"$dir/$file")
+        val raw = Tables.parquet(spark, s"$dir/$file")
         val (table, tomb) = loadTombstones(spark, dir) match {
           case Some(del) =>
             val n = del.count()
@@ -1436,13 +1445,13 @@ object IndexLifecycle {
         (if (file == "invfile.parquet") "ivf" else "pq",
           agg.getLong(0), agg.getLong(1), mf, tomb, None: Option[Double])
       case None =>
-        val idCol = spark.read.parquet(s"$dir/postings.parquet").columns
+        val idCol = Tables.parquet(spark, s"$dir/postings.parquet").columns
           .filterNot(Set("table", "bucket")).head
         val live = Similarity.lshVectors(spark, dir, idCol).count()
         // one pass over postings feeds all three counts; countDistinct
         // over the FULL row (table, bucket, id) is what a retried append
         // duplicates exactly
-        val pAgg = spark.read.parquet(s"$dir/postings.parquet")
+        val pAgg = Tables.parquet(spark, s"$dir/postings.parquet")
           .agg(count(lit(1)), countDistinct(col("table"), col("bucket")),
             countDistinct(col("table"), col("bucket"), col(idCol))).head()
         val buckets = pAgg.getLong(1)
@@ -1548,7 +1557,7 @@ object IndexLifecycle {
     // pre-params dirs (built before the columns existed) keep working.
     val info: Map[String, Any] =
       if (Ivf.layoutFileExists(spark, src, "buildinfo.parquet")) {
-        val r = spark.read.parquet(s"$src/buildinfo.parquet").head()
+        val r = Tables.parquet(spark, s"$src/buildinfo.parquet").head()
         r.schema.fieldNames.map(f => f -> r.get(r.fieldIndex(f))).toMap
       } else Map.empty
     def pLong(name: String): Option[Long] = info.get(name).collect {
@@ -1578,9 +1587,9 @@ object IndexLifecycle {
     publishGeneration(spark, dir, "rebuild") { gen =>
       cellFileOf(spark, src) match {
         case None =>
-          val meta = spark.read.parquet(s"$src/meta.parquet").head()
+          val meta = Tables.parquet(spark, s"$src/meta.parquet").head()
           val (idCol, vecCol) =
-            inferCols(spark.read.parquet(s"$src/vectors.parquet"))
+            inferCols(Tables.parquet(spark, s"$src/vectors.parquet"))
           Similarity.writeLshIndex(
             Similarity.lshVectors(spark, src, idCol).select(idCol, vecCol),
             idCol, vecCol, gen,
@@ -1588,7 +1597,7 @@ object IndexLifecycle {
             dim = meta.getAs[Int]("dim"),
             seed = seed.getOrElse(meta.getAs[Long]("seed")))
         case Some("invfile.parquet") =>
-          val raw = spark.read.parquet(s"$src/invfile.parquet")
+          val raw = Tables.parquet(spark, s"$src/invfile.parquet")
           val (idCol, vecCol) = inferCols(raw)
           Ivf.writeIndex(minusTombstones(spark, src, raw, idCol).select(idCol, vecCol),
             idCol, vecCol, gen,
@@ -1596,13 +1605,13 @@ object IndexLifecycle {
             sampleFraction = pDouble("sample_fraction").getOrElse(1.0),
             hierarchicalThreshold = rHier)
         case Some(_) =>
-          val raw = spark.read.parquet(s"$src/codes.parquet")
+          val raw = Tables.parquet(spark, s"$src/codes.parquet")
           val (idCol, vecCol) = inferCols(raw)
           // trained-geometry fallback for pre-params dirs only: m
           // (subspace count) is never clamped, so countDistinct(j) ==
           // the request; countDistinct(c) is the clamp-SHRUNK codebook —
           // see scaladoc
-          lazy val books = spark.read.parquet(s"$src/books.parquet")
+          lazy val books = Tables.parquet(spark, s"$src/books.parquet")
             .agg(countDistinct(col("j")), countDistinct(col("c"))).head()
           Quantize.writePqIndex(minusTombstones(spark, src, raw, idCol).select(idCol, vecCol),
             idCol, vecCol, gen,

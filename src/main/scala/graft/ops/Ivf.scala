@@ -5,6 +5,7 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.NearestCells.nearestCells
+import graft.engine.Tables
 
 /** IVF-flat approximate-nearest-neighbor search (the north-star "IVF or
   * LSH-bucketed variant" — this engine ships both; see [[Similarity]] for
@@ -618,7 +619,7 @@ object Ivf {
   /** [[loadIndexModel]] from a resolved generation dir. */
   private[graft] def readIndexModel(spark: org.apache.spark.sql.SparkSession,
                                     dir: String): IndexModel = {
-    val rows = spark.read.parquet(s"$dir/centroids.parquet")
+    val rows = Tables.parquet(spark, s"$dir/centroids.parquet")
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     def level(l: Int) = rows.filter(_._1 == l).sortBy(_._2).map(_._3)
@@ -643,7 +644,10 @@ object Ivf {
     * carries `invfile.parquet`, a [[Quantize.buildPqIndex]] dir carries
     * `codes.parquet` with the same columns (its `code` column prunes
     * away for exact-cosine consumers). Resolved once, driver-side, at
-    * plan time. */
+    * plan time. It reads every cell dir: a batch's or a stream's union
+    * of probed cells approaches the full cell set, so only the
+    * single-query probes ([[probeIndex]], [[Quantize.probePqIndex]])
+    * list just their probed dirs ([[readCells]]). */
   private[graft] def cellSource(spark: org.apache.spark.sql.SparkSession,
                                 dir: String, idCol: String,
                                 vecCol: String): DataFrame = {
@@ -654,7 +658,7 @@ object Ivf {
     // choke point the LSH arm uses (lshVectors): every consumer —
     // batch probe, streaming probe — reads the filtered frame
     IndexLifecycle.minusTombstones(spark, dir,
-      spark.read.parquet(src).select(col(idCol), col(vecCol), col("cell")),
+      Tables.parquet(spark, src).select(col(idCol), col(vecCol), col("cell")),
       idCol)
   }
 
@@ -719,27 +723,47 @@ object Ivf {
     }.coalesce(1).write.mode("overwrite").parquet(s"$dir/buildinfo.parquet")
   }
 
-  /** Probe a built index: load the model, filter the inverted file to
-    * the query's probed cells (driver-computed ids ⇒ STATIC partition
-    * pruning on the cell directories), exact cosine within, top-k, and
-    * the never-short exact-scan fallback over the inverted file (which
-    * IS the corpus). Training cost: zero — that is the point. */
+  /** Probe a built index: load the model, read only the query's probed
+    * cell directories (driver-computed ids ⇒ STATIC partition pruning:
+    * only those directories are listed, [[readCells]]), exact cosine
+    * within, top-k, and the never-short exact-scan fallback over the
+    * whole inverted file (which IS the corpus), read only when the
+    * probe comes up short. Training cost: zero — that is the point. */
   def probeIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                  idCol: String, vecCol: String,
                  query: DataFrame, queryVecCol: String, k: Int,
                  nprobe: Int = 4,
                  selector: Option[DataFrame] = None): DataFrame =
   IndexLifecycle.fencedProbeResolved(spark, dir) { phys =>
-    // the invfile read resolves its file listing eagerly. The result is
-    // a fully materialized local relation (neverShort), so the harness's
+    // every read resolves its file listing eagerly. The result is a
+    // fully materialized local relation (neverShort), so the harness's
     // post-body fence covers every scan.
     val model = readIndexModel(spark, phys)
+    val inv = s"$phys/invfile.parquet"
     // tombstones filter at the inverted-file choke point: probed scan,
-    // ranking, AND the never-short fallback read the filtered frame
-    probeIndexFrame(
-      IndexLifecycle.minusTombstones(spark, phys,
-        spark.read.parquet(s"$phys/invfile.parquet"), idCol),
+    // ranking, AND the never-short fallback read the filtered frames
+    val minusDeletes = IndexLifecycle.tombstoneFilter(spark, phys, idCol,
+      Dedup.HotShingleBroadcastLimit)
+    probeSources(cells => minusDeletes(readCells(spark, inv, cells)),
+      minusDeletes(Tables.parquet(spark, inv)),
       model, idCol, vecCol, query, queryVecCol, k, nprobe, selector)
+  }
+
+  /** The probed `cells` of the cell-partitioned table at `table` (an
+    * inverted file or a code table): only the `cell=<c>` dirs that exist
+    * are read, so Spark lists at most |cells| dirs on the driver instead
+    * of every cell dir of the index (past 32 dirs that listing is a
+    * Spark job). With no probed dir present the whole table is read:
+    * the probe is then empty and its never-short fallback needs the
+    * corpus anyway. */
+  private[ops] def readCells(spark: org.apache.spark.sql.SparkSession,
+                             table: String, cells: Seq[Int]): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(table)
+    val present = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(root).map(_.getPath.getName).toSet
+    val dirs = cells.distinct.map(c => s"cell=$c").filter(present)
+    if (dirs.isEmpty) Tables.parquet(spark, table)
+    else Tables.partitions(spark, table, dirs.map(d => s"$table/$d"))
   }
 
   /** Does `dir/child` exist? The layout-dispatch primitive shared by
@@ -843,9 +867,10 @@ object Ivf {
     batchedProbeTopK(inv, broadcast(probes), inv, idCol, vecCol, qf, k)
   }
 
-  /** The probe core over an already-loaded (inv, model) pair — shared by
-    * [[probeIndex]] and IvfSpec's round-trip-equivalence spec (which feeds
-    * the in-memory inverted file to prove parquet changes nothing).
+  /** The probe core over an already-loaded (inv, model) pair — what
+    * IvfSpec's round-trip-equivalence spec feeds the in-memory inverted
+    * file to prove parquet changes nothing ([[probeIndex]] runs the same
+    * core, [[probeSources]], over its probed cells and corpus).
     *
     * SINGLE-query contract, like [[topK]]/[[Quantize.ivfPqTopK]]: probed
     * cells are driver-computed from the one query vector (that is what
@@ -857,7 +882,18 @@ object Ivf {
                                    idCol: String, vecCol: String,
                                    query: DataFrame, queryVecCol: String,
                                    k: Int, nprobe: Int,
-                                   selector: Option[DataFrame] = None): DataFrame = {
+                                   selector: Option[DataFrame] = None): DataFrame =
+    probeSources(_ => inv, inv, model, idCol, vecCol, query, queryVecCol, k,
+      nprobe, selector)
+
+  /** [[probeIndexFrame]] over two sources: `probedRows` holds at least
+    * the rows of the cells it is given, `corpus` every row, and it is
+    * built only when the probe comes up short. */
+  private def probeSources(probedRows: Seq[Int] => DataFrame, corpus: => DataFrame,
+                         model: IndexModel, idCol: String, vecCol: String,
+                         query: DataFrame, queryVecCol: String,
+                         k: Int, nprobe: Int,
+                         selector: Option[DataFrame]): DataFrame = {
     val qRows = query.select(col(queryVecCol).cast("array<double>").as("__q"))
       .take(2)
     require(qRows.length == 1,
@@ -865,20 +901,23 @@ object Ivf {
         "probed cells are driver-computed from one vector — batch callers " +
         "use Ivf.probeIndexBatch against the same dir")
     val q = qRows.head.getSeq[Double](0).toArray
+    val cells = model.probedCells(q, nprobe)
     val probes = broadcast(query.select(col(queryVecCol).as("__qv")))
     // the selector (FAISS IDSelector analog) rides the single inverted-
     // file choke point: the probed scan AND the exact fallback read the
-    // filtered frame, so a disallowed id can surface nowhere and the
+    // filtered frames, so a disallowed id can surface nowhere and the
     // never-short contract runs over the FILTERED corpus. The cell
     // filter still pushes through the semi-join to the scan — static
     // partition pruning survives filtering.
-    val src = Similarity.applySelector(inv, selector, idCol)
-    val probed = src
-      .filter(col("cell").isin(model.probedCells(q, nprobe).map(Integer.valueOf): _*))
+    val allowed = Similarity.selectorFilter(selector, idCol,
+      Dedup.HotShingleBroadcastLimit)
+    val probed = allowed(probedRows(cells))
+      .filter(col("cell").isin(cells.map(Integer.valueOf): _*))
       .crossJoin(probes)
       .select(col(idCol), round(Similarity.cosine(col(vecCol), col("__qv")), 4).as("sim"))
       .orderBy(col("sim").desc, col(idCol))
       .limit(k)
-    Similarity.neverShort(probed, src, idCol, vecCol, query, queryVecCol, k)
+    Similarity.neverShort(probed, allowed(corpus), idCol, vecCol, query,
+      queryVecCol, k)
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Tables
 
 /** Embedding quantization (LLM-pipeline memory lever): symmetric int8
   * per-vector quantization — 4× smaller embedding columns, which at
@@ -415,7 +416,7 @@ object Quantize {
   private[ops] def readPqIndex(spark: org.apache.spark.sql.SparkSession,
                                dir: String): PqIndexModel = {
     val coarse = Ivf.readIndexModel(spark, dir)
-    val rows = spark.read.parquet(s"$dir/books.parquet")
+    val rows = Tables.parquet(spark, s"$dir/books.parquet")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     require(rows.nonEmpty, s"no PQ codebooks found under $dir")
     val m = rows.map(_._1).max + 1
@@ -427,10 +428,12 @@ object Quantize {
 
   /** Probe a built IVFADC index: NO training, NO encode pass — the ADC
     * stage reads precomputed codes from the probed cell directories
-    * only, re-ranks the `rerank` shortlist by exact cosine, and falls
-    * back to the exact scan below k (never-short, like every search
-    * path). This is the serving wall the in-query `c14_ann_ivfpq`
-    * number buries under two KMeans stages. */
+    * only (only those directories are listed, [[Ivf.readCells]]),
+    * re-ranks the `rerank` shortlist by exact cosine, and falls back to
+    * the exact scan below k over the whole code table, read only then
+    * (never-short, like every search path). This is the serving wall
+    * the in-query `c14_ann_ivfpq` number buries under two KMeans
+    * stages. */
   def probePqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                    idCol: String, vecCol: String,
                    query: DataFrame, queryVecCol: String, k: Int,
@@ -440,18 +443,20 @@ object Quantize {
     // the result is a materialized local relation (neverShort),
     // fence-coverable
     val model = readPqIndex(spark, phys)
+    val codes = s"$phys/codes.parquet"
     // tombstones filter at the code-table choke point (Ivf.probeIndex's
-    // rationale): ADC shortlist AND exact fallback read the filtered frame
-    pqProbeCore(
-      IndexLifecycle.minusTombstones(spark, phys,
-        spark.read.parquet(s"$phys/codes.parquet"), idCol),
+    // rationale): ADC shortlist AND exact fallback read the filtered frames
+    val minusDeletes = IndexLifecycle.tombstoneFilter(spark, phys, idCol,
+      Dedup.HotShingleBroadcastLimit)
+    pqProbeSources(cells => minusDeletes(Ivf.readCells(spark, codes, cells)),
+      minusDeletes(Tables.parquet(spark, codes)),
       model, idCol, vecCol, query, queryVecCol, k, nprobe, rerank, selector)
   }
 
-  /** The probe core over an already-loaded (codes, model) pair — shared
-    * by [[probePqIndex]] and QuantizeSpec's round-trip-equivalence spec
-    * (which feeds the in-memory code table to prove parquet changes
-    * nothing). SINGLE-query contract like [[ivfPqTopK]], enforced — the
+  /** The probe core over an already-loaded (codes, model) pair — what
+    * QuantizeSpec's round-trip-equivalence spec feeds the in-memory code
+    * table to prove parquet changes nothing ([[probePqIndex]] runs the
+    * same core, [[pqProbeSources]], over its probed cells and corpus). SINGLE-query contract like [[ivfPqTopK]], enforced — the
     * probed cells are driver-computed from the one query vector; batch
     * callers use [[Ivf.probeIndexBatch]] against the same dir (the code
     * table carries the raw vectors, so the exact-cosine batch serve
@@ -460,7 +465,18 @@ object Quantize {
                                idCol: String, vecCol: String,
                                query: DataFrame, queryVecCol: String,
                                k: Int, nprobe: Int, rerank: Int,
-                               selector: Option[DataFrame] = None): DataFrame = {
+                               selector: Option[DataFrame] = None): DataFrame =
+    pqProbeSources(_ => codes, codes, model, idCol, vecCol, query, queryVecCol,
+      k, nprobe, rerank, selector)
+
+  /** [[pqProbeCore]] over two sources: `probedRows` holds at least the
+    * rows of the cells it is given, `corpus` every row, and it is built
+    * only when the probe comes up short. */
+  private def pqProbeSources(probedRows: Seq[Int] => DataFrame, corpus: => DataFrame,
+                           model: PqIndexModel, idCol: String, vecCol: String,
+                           query: DataFrame, queryVecCol: String,
+                           k: Int, nprobe: Int, rerank: Int,
+                           selector: Option[DataFrame]): DataFrame = {
     require(rerank >= k, s"rerank $rerank < k $k")
     val qRows = query.select(col(queryVecCol).cast("array<double>").as("__q"))
       .take(2)
@@ -469,13 +485,14 @@ object Quantize {
         "probed cells are driver-computed from one vector — batch callers " +
         "use Ivf.probeIndexBatch against the same dir")
     val q = qRows.head.getSeq[Double](0).toArray
+    val cells = model.coarse.probedCells(q, nprobe)
     // selector (FAISS IDSelector analog): ADC shortlist and exact
     // fallback both read the filtered code table — Ivf.probeIndexFrame's
     // rationale
-    val src = Similarity.applySelector(codes, selector, idCol)
-    val shortlist = src
-      .filter(col("cell").isin(
-        model.coarse.probedCells(q, nprobe).map(Integer.valueOf): _*))
+    val allowed = Similarity.selectorFilter(selector, idCol,
+      Dedup.HotShingleBroadcastLimit)
+    val shortlist = allowed(probedRows(cells))
+      .filter(col("cell").isin(cells.map(Integer.valueOf): _*))
       .select(col(idCol), col(vecCol),
         (model.coarse.cellDot(q) +
           pqAdcScore(col("code"), model.cb, q)).as("__adc"))
@@ -483,6 +500,6 @@ object Quantize {
       .limit(rerank)
     Similarity.neverShort(
       Similarity.bruteForceTopK(shortlist, idCol, vecCol, query, queryVecCol, k),
-      src, idCol, vecCol, query, queryVecCol, k)
+      allowed(corpus), idCol, vecCol, query, queryVecCol, k)
   }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.Tables
 
 /** Embedding similarity search (SURVEY.md §2 C14 + north-star ANN):
   * brute-force cosine top-k as the exact baseline, and a random-hyperplane
@@ -433,22 +434,26 @@ object Similarity {
     *     scan would re-answer identically, return the probe;
     *   - otherwise → exact scan. Recall degrades; the answer is never
     *     empty (the never-short contract). The corpus count() is paid ONLY on the
-    *     already-failing branch. */
-  private[ops] def neverShort(probe: DataFrame, emb: DataFrame,
+    *     already-failing branch.
+    * `emb` is taken by name and built at most once, on that branch: a
+    * serve probe that reads only its probed cells never lists the rest
+    * of the index unless it comes up short. */
+  private[ops] def neverShort(probe: DataFrame, emb: => DataFrame,
                               idCol: String, vecCol: String,
                               query: DataFrame, queryVecCol: String,
                               k: Int): DataFrame = {
     val rows = probe.collect()
+    lazy val corpus = emb
     def local(r: Array[org.apache.spark.sql.Row], schema: org.apache.spark.sql.types.StructType) =
       probe.sparkSession.createDataFrame(java.util.Arrays.asList(r: _*), schema)
-    if (rows.length >= k || emb.count() <= rows.length) local(rows, probe.schema)
+    if (rows.length >= k || corpus.count() <= rows.length) local(rows, probe.schema)
     else {
       // the fallback is ≤ k rows too (bruteForceTopK ends in limit(k)):
       // materialize it as a local relation as well, so the WHOLE probe
       // executes inside the call — the serve probes' stale-file retry
       // (IndexLifecycle.retryOnStaleFiles) can then cover every scan,
       // instead of leaving a lazy fallback tail to fail at the caller
-      val fb = bruteForceTopK(emb, idCol, vecCol, query, queryVecCol, k)
+      val fb = bruteForceTopK(corpus, idCol, vecCol, query, queryVecCol, k)
       local(fb.collect(), fb.schema)
     }
   }
@@ -522,8 +527,8 @@ object Similarity {
   def multiProbeFor(spark: org.apache.spark.sql.SparkSession, root: String,
                     targetCandidates: Int = 4096): Int = {
     val dir = IndexLifecycle.resolveIndexDir(spark, root)
-    val meta = spark.read.parquet(s"$dir/meta.parquet").head()
-    val live = spark.read.parquet(s"$dir/vectors.parquet").count()
+    val meta = Tables.parquet(spark, s"$dir/meta.parquet").head()
+    val live = Tables.parquet(spark, s"$dir/vectors.parquet").count()
     multiProbeForSized(live, meta.getAs[Int]("planes"),
       meta.getAs[Int]("tables"), targetCandidates)
   }
@@ -568,7 +573,7 @@ object Similarity {
     // signature pass reads that back — never the source twice.
     emb.select(col(idCol), col(vecCol))
       .write.mode("overwrite").parquet(s"$gen/vectors.parquet")
-    val src = spark.read.parquet(s"$gen/vectors.parquet")
+    val src = Tables.parquet(spark, s"$gen/vectors.parquet")
     lshIndex(src, idCol, vecCol, tables, planes, dim, seed)
       .select(col("table"), col("bucket"), col(idCol))
       .repartitionByRange(col("table"), col("bucket"))
@@ -601,7 +606,7 @@ object Similarity {
     // rationale; the committer caveat on IndexLifecycle's
     // generation-root intro applies)
     val phys = IndexLifecycle.resolveIndexDir(spark, dir)
-    val meta = spark.read.parquet(s"$phys/meta.parquet").head()
+    val meta = Tables.parquet(spark, s"$phys/meta.parquet").head()
     val (planes, tables, dim, seed) =
       (meta.getAs[Int]("planes"), meta.getAs[Int]("tables"),
         meta.getAs[Int]("dim"), meta.getAs[Long]("seed"))
@@ -719,7 +724,7 @@ object Similarity {
                                 deleteBroadcastLimit: Long =
                                   Dedup.HotShingleBroadcastLimit): DataFrame = {
     IndexLifecycle.minusTombstones(spark, dir,
-      spark.read.parquet(s"$dir/vectors.parquet"), idCol,
+      Tables.parquet(spark, s"$dir/vectors.parquet"), idCol,
       deleteBroadcastLimit)
   }
 
@@ -740,11 +745,18 @@ object Similarity {
                                    selector: Option[DataFrame], idCol: String,
                                    broadcastLimit: Long =
                                      Dedup.HotShingleBroadcastLimit): DataFrame =
-    selector.fold(table) { sel =>
+    selectorFilter(selector, idCol, broadcastLimit)(table)
+
+  /** [[applySelector]] for several frames: the selector's ids
+    * materialize and count once, and the returned filter restricts each
+    * frame it is applied to. */
+  private[ops] def selectorFilter(selector: Option[DataFrame], idCol: String,
+                                  broadcastLimit: Long): DataFrame => DataFrame =
+    selector.fold[DataFrame => DataFrame](identity) { sel =>
       val ids = sel.select(col(idCol)).distinct().localCheckpoint(true)
       if (ids.count() <= broadcastLimit)
-        table.join(broadcast(ids), Seq(idCol), "left_semi")
-      else table.join(ids.hint("SHUFFLE_HASH"), Seq(idCol), "left_semi")
+        _.join(broadcast(ids), Seq(idCol), "left_semi")
+      else _.join(ids.hint("SHUFFLE_HASH"), Seq(idCol), "left_semi")
     }
 
   /** A literal In list longer than this stops being a filter and starts
@@ -820,7 +832,7 @@ object Similarity {
                     multiProbe: Int = 0,
                     selector: Option[DataFrame] = None): DataFrame =
   IndexLifecycle.fencedProbeResolved(spark, dir) { phys =>
-    val meta = spark.read.parquet(s"$phys/meta.parquet").head()
+    val meta = Tables.parquet(spark, s"$phys/meta.parquet").head()
     val (planes, tables, dim, seed) =
       (meta.getAs[Int]("planes"), meta.getAs[Int]("tables"),
         meta.getAs[Int]("dim"), meta.getAs[Long]("seed"))
@@ -860,7 +872,7 @@ object Similarity {
     // tombstone filter — postings stay unfiltered (stale hits just
     // match nothing).
     val vectors = applySelector(lshVectors(spark, phys, idCol), selector, idCol)
-    val postings = spark.read.parquet(s"$phys/postings.parquet")
+    val postings = Tables.parquet(spark, s"$phys/postings.parquet")
     // foldLeft(false): an empty pair set (null query vector) selects
     // nothing instead of crashing an empty reduce — the fallback answers.
     // Past [[OrPairCap]] pairs the OR becomes the cost: PERF finding 30
@@ -912,7 +924,7 @@ object Similarity {
                          multiProbe: Int = 0,
                          selector: Option[DataFrame] = None): DataFrame =
   IndexLifecycle.fencedProbeResolved(spark, dir) { phys =>
-    val meta = spark.read.parquet(s"$phys/meta.parquet").head()
+    val meta = Tables.parquet(spark, s"$phys/meta.parquet").head()
     val (planes, tables, dim, seed) =
       (meta.getAs[Int]("planes"), meta.getAs[Int]("tables"),
         meta.getAs[Int]("dim"), meta.getAs[Long]("seed"))
@@ -937,7 +949,7 @@ object Similarity {
       }
     val vectors = applySelector(lshVectors(spark, phys, idCol), selector, idCol)
     val qIdx = broadcast(qPairsDf)
-    val postings = spark.read.parquet(s"$phys/postings.parquet")
+    val postings = Tables.parquet(spark, s"$phys/postings.parquet")
     // (query, candidate) pairs: ids that share any (table, bucket) with
     // the query — distinct BEFORE scoring so multi-table collisions
     // score once, same as the single probe's dropDuplicates

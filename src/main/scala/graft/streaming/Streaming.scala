@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TTLConfig, ValueState}
 import org.apache.spark.sql.types._
+import graft.engine.Tables
 
 /** Structured Streaming over the `events` table shape (SURVEY.md §2
   * C17–C21). Every transform is written against a plain DataFrame so the
@@ -269,7 +270,7 @@ object Streaming {
                              indexDir: String, tau: Double,
                              multiProbe: Int = 0,
                              selector: Option[DataFrame] = None): DataFrame = {
-    val meta = spark.read.parquet(s"$indexDir/meta.parquet").head()
+    val meta = Tables.parquet(spark, s"$indexDir/meta.parquet").head()
     val (planes, tables, dim, seed) =
       (meta.getAs[Int]("planes"), meta.getAs[Int]("tables"),
         meta.getAs[Int]("dim"), meta.getAs[Long]("seed"))
@@ -284,7 +285,7 @@ object Streaming {
     val vectors = graft.ops.Similarity.applySelector(
       graft.ops.Similarity.lshVectors(spark, indexDir, idCol),
       selector, idCol)
-    val postings = spark.read.parquet(s"$indexDir/postings.parquet")
+    val postings = Tables.parquet(spark, s"$indexDir/postings.parquet")
     // the arrival's probed-bucket array: stride buckets per table (the
     // exact signature + multiProbe lowest-|margin| single-bit flips, all
     // from ONE codegen pass under the PERSISTED sizing); stride = 1

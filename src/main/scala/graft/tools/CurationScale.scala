@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Dedup
+import graft.engine.Tables
 
 /** Scale rung for the COMPOSITION pipelines (r18 verdict #4): the c24
   * curation family composes primitives that each carry 100–400× direct
@@ -81,7 +82,7 @@ object CurationScale {
       if (!new java.io.File(s"$dir/embeddings.parquet").exists())
         ScaleBench.scaledEmb(baseEmb, k).write.mode("overwrite")
           .parquet(s"$dir/embeddings.parquet")
-      val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
+      val nDocs = Tables.parquet(spark, s"$dir/documents.parquet").count()
 
       for (name <- family) {
         var wall = 0.0
@@ -98,7 +99,7 @@ object CurationScale {
       // eager-gate compose-ONLY cost (verdict #6): plan built, never
       // executed. maxDf present = 2 eager jobs (sig checkpoint + stats
       // agg); absent = +prefix-df pass + hot-key count
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.parquet(spark, s"$dir/documents.parquet")
       for (shape <- Seq("maxDf" -> Some(100), "noMaxDf" -> None) if doCompose) {
         val walls = (1 to 3).map { _ =>
           timeIt(Dedup.jaccardNearDup(docs, "doc_id", "text",

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Ivf, IndexLifecycle, Similarity}
+import graft.engine.Tables
 
 /** Lifecycle scaling evidence the main ScaleBench sweep doesn't carry
   * (r14 verdict #3/#7), at 1×/2×/5×/10×/25× the sf0.1 embeddings:
@@ -46,7 +47,7 @@ object LifecycleSweep {
       if (!new java.io.File(s"$dir/embeddings.parquet").exists())
         ScaleBench.scaledEmb(baseEmb, k).write.mode("overwrite")
           .parquet(s"$dir/embeddings.parquet")
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Tables.parquet(spark, s"$dir/embeddings.parquet")
         .repartition(cpus.toInt).localCheckpoint(true)
       val nVecs = emb.count()
 
@@ -66,7 +67,7 @@ object LifecycleSweep {
       // affected cells, computed untimed (removeIds re-derives them
       // inside the timed call)
       def affectedCells(b: DataFrame): Long =
-        spark.read.parquet(s"${IndexLifecycle.resolveIndexDir(spark, ivfDir)}/invfile.parquet")
+        Tables.parquet(spark, s"${IndexLifecycle.resolveIndexDir(spark, ivfDir)}/invfile.parquet")
           .join(broadcast(b), Seq("vec_id"), "left_semi")
           .select("cell").distinct().count()
       val cellsTotal = IndexLifecycle.indexStats(spark, ivfDir).head()
@@ -109,14 +110,14 @@ object LifecycleSweep {
         Similarity.buildLshIndex(emb.filter(col("vec_id") =!= 0),
           "vec_id", "embedding", lshDir)
       val lshGen = IndexLifecycle.resolveIndexDir(spark, lshDir)
-      val meta = spark.read.parquet(s"$lshGen/meta.parquet").head()
+      val meta = Tables.parquet(spark, s"$lshGen/meta.parquet").head()
       val (planes, tables, dim, seed) =
         (meta.getAs[Int]("planes"), meta.getAs[Int]("tables"),
           meta.getAs[Int]("dim"), meta.getAs[Long]("seed"))
       val sizedQ = Similarity.multiProbeFor(spark, lshDir)
       // measured candidate volume at the sized q, averaged over 5
       // queries — the same (table, bucket)-pair set probeLshIndex scans
-      val postings = spark.read.parquet(s"$lshGen/postings.parquet")
+      val postings = Tables.parquet(spark, s"$lshGen/postings.parquet")
       val qVecs = emb.filter(col("vec_id") < 5)
         .select(col("embedding").cast("array<double>")).collect()
         .map(_.getSeq[Double](0).toArray)

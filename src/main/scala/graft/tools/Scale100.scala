@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Ivf, IndexLifecycle, Similarity}
+import graft.engine.Tables
 
 /** The 100× rung (r16 verdict #3): every scale claim in PERF.md is
   * measured through 25× (1.4 decades); the north star is 100 TB. This
@@ -82,7 +83,7 @@ object Scale100 {
       // `git show 2262a09:src/main/scala/graft/tools/CompactProfile.scala`) — driver-held
       // block pressure, not the operator; docs checkpoint lazily below
       val emb = if (jacOnly) null
-        else spark.read.parquet(s"$dir/embeddings.parquet")
+        else Tables.parquet(spark, s"$dir/embeddings.parquet")
           .repartition(cpus.toInt).localCheckpoint(true)
       val nVecs = if (jacOnly) 0L else emb.count()
 
@@ -192,7 +193,7 @@ object Scale100 {
 
       if (doDedup) {
       // ── jaccard near-dup + CC (the dedup headline) ───────────────────
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.parquet(spark, s"$dir/documents.parquet")
         .repartition(cpus.toInt).localCheckpoint(true)
       val nDocs = docs.count()
       var tJac = 0.0

@@ -6,6 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, S
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, IndexLifecycle, Ivf, Quantize, Relational, Similarity, Text}
+import graft.engine.Tables
 
 /** Scaling evidence for the hot operator families: run jaccard near-dup, connected
   * components, near-dup removal, MinHash LSH, embedding-LSH ANN,
@@ -167,9 +168,9 @@ object ScaleBench {
         scaledEvents(baseEv, k).write.mode("overwrite").parquet(s"$dir/events.parquet")
       // equalized parallelism + checkpoint: time the operators, not the
       // scan or the partition-count accident of how /tmp was written
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = Tables.parquet(spark, s"$dir/documents.parquet")
         .repartition(cpus.toInt).localCheckpoint(true)
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Tables.parquet(spark, s"$dir/embeddings.parquet")
         .repartition(cpus.toInt).localCheckpoint(true)
       val nDocs = docs.count(); val nVecs = emb.count()
 

@@ -66,6 +66,19 @@ class ConventionsSpec extends AnyFunSuite {
     }
   }
 
+  /** Every raw parquet read (`.read.parquet(`, options between them
+    * included) outside `engine/Tables.scala`, as "path:line".
+    * `Tables.parquet` is the one load path: it reads the schema from
+    * one footer on the driver instead of launching Spark's inference
+    * job. */
+  def rawParquetReads(sources: Seq[(String, String)]): Seq[String] = {
+    val read = """\.read\s*(?:\.\w+\([^()]*\)\s*)*\.parquet\(""".r
+    for {
+      (path, text) <- sources if !path.replace('\\', '/').endsWith("graft/engine/Tables.scala")
+      m <- read.findAllMatchIn(text)
+    } yield s"$path:${text.take(m.start).count(_ == '\n') + 1}"
+  }
+
   /** The programs `src/main` may hold, each with why it stays. */
   val AllowedMains: Map[String, String] = Map(
     "graft.Bench" -> "the 157-query noop-sink bench and its floors",
@@ -110,6 +123,21 @@ class ConventionsSpec extends AnyFunSuite {
     val planted = mainSources :+ ("src/main/scala/graft/ops/Cluster.scala" ->
       "object Cluster {\n  def fit(df: DataFrame) = new org.apache.spark.ml.clustering.KMeans().setK(8).fit(df)\n}")
     assert(kmeansConstructions(planted).toSet -- Set("Ivf.scala:fitMllib") == Set("Cluster.scala:fit"))
+  }
+
+  test("every parquet read in src/main goes through Tables") {
+    assert(rawParquetReads(mainSources).isEmpty, rawParquetReads(mainSources))
+    // negative control: a planted raw read, with and without options, is caught
+    val planted = mainSources ++ Seq(
+      "src/main/scala/graft/ops/Raw.scala" ->
+        "object Raw {\n  def f(spark: SparkSession) = spark.read.parquet(p)\n}",
+      "src/main/scala/graft/tools/Opt.scala" ->
+        "object Opt {\n  def f(spark: SparkSession) =\n    spark.read\n      .option(\"basePath\", r).parquet(p)\n}")
+    assert(rawParquetReads(planted) ==
+      Seq("src/main/scala/graft/ops/Raw.scala:2", "src/main/scala/graft/tools/Opt.scala:3"))
+    // Tables itself is the one place a raw read may sit
+    assert(rawParquetReads(Seq("src/main/scala/graft/engine/Tables.scala" ->
+      "spark.read.parquet(p)")).isEmpty)
   }
 
   test("every program in src/main is on the allowlist") {

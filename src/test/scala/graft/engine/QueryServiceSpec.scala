@@ -130,6 +130,53 @@ class QueryServiceSpec extends SparkSpec {
     svc2.close()
   }
 
+  test("a rewritten table misses the reuse cache; an untouched one hits, across a reload") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-rewrite").toString
+    Seq(("homo_sapiens", "g1"), ("homo_sapiens", "g2")).toDF("species", "gene_id")
+      .write.parquet(s"$root/gene.parquet")
+    Tables.read(spark, sf0001, "region").write.parquet(s"$root/region.parquet")
+    val dir = Files.createTempDirectory("graft-results").toString
+    val cat = new Catalog(spark, root)
+    def rows(svc: QueryService, id: String) = svc.preview(id).toOption.get.size - 1
+    val svc = new QueryService(spark, cat, dir)
+    val before = svc.submit("gene", "species", "homo_sapiens")
+    assert(svc.await(before) == Succeeded && rows(svc, before) == 2)
+    assert(svc.submit("gene", "species", "homo_sapiens") == before)
+    val region = svc.submit("region", "r_name", "ASIA")
+    assert(svc.await(region) == Succeeded)
+
+    Seq(("homo_sapiens", "g1"), ("homo_sapiens", "g2"), ("homo_sapiens", "g3"))
+      .toDF("species", "gene_id").write.mode("overwrite").parquet(s"$root/gene.parquet")
+    val after = svc.submit("gene", "species", "homo_sapiens")
+    assert(after != before, "a rewritten table was served from the cache")
+    assert(svc.await(after) == Succeeded && rows(svc, after) == 3)
+    assert(svc.submit("region", "r_name", "ASIA") == region)
+    svc.close()
+
+    val svc2 = new QueryService(spark, cat, dir)
+    assert(svc2.submit("region", "r_name", "ASIA") == region)
+    assert(svc2.submit("gene", "species", "homo_sapiens") == after)
+    svc2.close()
+  }
+
+  test("a registry key written before the input digest loads but never matches") {
+    val dir = Files.createTempDirectory("graft-results").toString
+    val cat = new Catalog(spark, sf0001)
+    val df = QueryBuilder.build(cat.table("region"), "r_name", "ASIA", "*", None)
+    val bareHash = df.queryExecution.analyzed.canonicalized.semanticHash()
+    val old = java.util.UUID.randomUUID().toString
+    Files.write(java.nio.file.Paths.get(dir, "_registry.tsv"),
+      s"S\t$old\tSUCCEEDED\t\nC\t$bareHash\t$old\t${System.currentTimeMillis()}\n"
+        .getBytes("UTF-8"))
+    val svc = new QueryService(spark, cat, dir)
+    assert(svc.status(old).exists(_.state == Succeeded))
+    val id = svc.submitPlan(df)
+    assert(id != old)
+    assert(svc.await(id) == Succeeded)
+    svc.close()
+  }
+
   test("registry load skips corrupt lines instead of failing construction") {
     val dir = Files.createTempDirectory("graft-results").toString
     val cat = new Catalog(spark, sf0001)
